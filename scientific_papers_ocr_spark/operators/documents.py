@@ -1,15 +1,16 @@
 """Per-conversation wide stage: segmentation + reassembly (SURVEY.md §7
 stage 4) — the pipeline's single shuffle.
 
-``groupBy(conv_id).applyInPandas`` receives each conversation's per-turn
-extraction records, orders them by ``turn_idx`` inside the group (Spark gives
-no intra-group order guarantee — the sort is load-bearing), and runs the
-oracle segmentation + document assembly.
+One exchange on ``bucket`` (a deterministic function of ``conv_id``) plus
+``sortWithinPartitions(conv_id, turn_idx)`` delivers each conversation's
+per-turn records whole and turn-ordered (the sort is load-bearing); one
+``mapInPandas`` walks the sorted batches, splitting conversations itself
+with a cross-batch carry, and runs the oracle segmentation + document
+assembly.
 
 Scale notes (100 TB / 10^12 turns):
-- the shuffle key is ``conv_id``; AQE skew-split handles moderately skewed
-  conversations because the map side emits compact per-turn records (page
-  text + status), not raw payload copies;
+- the map side emits compact per-turn records (page text + status), not raw
+  payload copies;
 - a conversation must fit in one executor's memory — same contract as the
   reference, whose segmentation is whole-document by construction.  For
   pathological mega-conversations, ``prune_for_assembly`` (below) bounds what
@@ -23,7 +24,7 @@ import json
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .. import schemas
+from .. import schemas, worker
 from ..oracle import assembly, segmentation, textnorm
 from . import fastjson
 
@@ -150,6 +151,7 @@ def assemble_documents(turns_out: DataFrame, num_partitions: int | None = None) 
     pruned = prune_for_assembly(turns_out)
 
     def process(batches):
+        worker.bootstrap()
         carry: pd.DataFrame | None = None
 
         def assemble_span(pdf: pd.DataFrame, lo: int, hi: int) -> dict:
@@ -250,6 +252,7 @@ def assemble_documents_from_input(
     unioned = inputs.unionByName(verdicts)
 
     def process(batches):
+        worker.bootstrap()
         carry: pd.DataFrame | None = None
 
         def emit(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -20,7 +20,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .. import schemas
+from .. import schemas, worker
 from ..oracle import assembly, layout, markup
 
 
@@ -123,6 +123,7 @@ def extract_turns(
     """
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker.bootstrap()
         for pdf in batches:
             if len(pdf):
                 yield _process_batch(
@@ -154,6 +155,7 @@ def repair_parts(transcripts: DataFrame) -> DataFrame:
     """
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker.bootstrap()
         for pdf in batches:
             rows = {"conv_id": [], "turn_idx": [], "part_idx": [], "text": []}
             for conv_id, turn_idx, text, tool in zip(

@@ -5,9 +5,9 @@ Topology (one job, one shuffle):
     read transcripts
       → [narrow] fused per-turn tokenize/verify/repair  (mapInPandas)
       → write turns table (partitioned by bucket)
-      → [wide]  exchange on conv_id → per-conv assembly (applyInPandas)
+      → [wide]  exchange on bucket → per-conv assembly (mapInPandas)
       → write docs + spans tables (partitioned by bucket)
-      → write lineage rows (counts + checksum per bucket)
+      → commit lineage rows (counts + checksum per bucket, one file)
 
 Resume protocol (north rule): the driver reads committed lineage buckets and
 anti-joins them out of the input BEFORE the narrow stage, so a restart only
@@ -295,7 +295,7 @@ def run_pipeline(
     # table, so its scan+agg runs on a driver thread CONCURRENTLY with the
     # docs/spans jobs (concurrent jobs from separate driver threads are a
     # first-class Spark feature; the lineage scan is JVM-side columnar work
-    # that overlaps the Python-worker-bound assembly).  The collect is
+    # that overlaps the Python-worker-bound assembly).  The Arrow collect is
     # planning-sized — one row per bucket — and turns the end-of-job
     # lineage step from a full scan+agg into a trivial 64-row write,
     # removing a fixed serial component that does not shrink with cores.
@@ -306,7 +306,7 @@ def run_pipeline(
     def _compute_lineage() -> None:
         try:
             spark.sparkContext.setJobGroup(lineage_group, "pipeline: lineage", True)
-            lineage_box["rows"] = lineage_out.collect()
+            lineage_box["table"] = lineage_out.toArrow()
         except Exception as e:  # noqa: BLE001 — re-raised on the main thread
             lineage_box["err"] = e
 
@@ -339,9 +339,11 @@ def run_pipeline(
     lineage_thread.join()
     if "err" in lineage_box:
         raise lineage_box["err"]
-    spark.createDataFrame(lineage_box["rows"], schema=out_schema["lineage"]).write.mode(
-        mode
-    ).parquet(lineage_path)
+    # from Arrow, the commit frame is a JVM-local relation: no Python-worker
+    # tasks (a Row list would become a parallelized Python RDD), one file
+    spark.createDataFrame(lineage_box["table"], schema=out_schema["lineage"]).coalesce(
+        1
+    ).write.mode(mode).parquet(lineage_path)
     # every output is committed; drop the skew-path planning caches so
     # repeated run_pipeline calls in a long-lived session don't accumulate
     # cached partitions in executor memory

@@ -15,7 +15,16 @@ def spark():
         app_name="tests",
         cores=4,
         shuffle_partitions=4,
-        extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "256"},
+        extra_conf={
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+            # plan-shape tests match scan paths in explain output; untruncated
+            # metadata keeps them independent of the checkout's path length
+            "spark.sql.maxMetadataStringLength": "10000",
+            # the session lives for the whole suite: with the 48g default
+            # heap its JVM grew to 15 GB RSS on a 16 GB host and was
+            # OOM-killed mid-suite
+            "spark.driver.memory": "6g",
+        },
     )
     yield s
     s.stop()

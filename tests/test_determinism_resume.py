@@ -105,6 +105,8 @@ def test_lineage_counters_match_turns(spark, base_df, tmp_path):
     out_dir = str(tmp_path / "out2")
     out = pipeline.run_pipeline(spark, base_df, output_dir=out_dir, num_buckets=8)
     lineage = out["lineage"]
+    committed = os.listdir(os.path.join(out_dir, "lineage"))
+    assert len([f for f in committed if f.endswith(".parquet")]) == 1, committed
     totals = lineage.agg(
         F.sum("n_turns").alias("turns"), F.sum("n_convs").alias("convs")
     ).collect()[0]

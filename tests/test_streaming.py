@@ -97,6 +97,10 @@ def test_stateful_assembly_matches_batch_oracle(spark, corpus_path, tmp_path):
         .start()
     )
     q.awaitTermination(180)
+    # with a processing-time state timeout the availableNow query keeps
+    # running empty micro-batches and never ends on its own: stop it, or it
+    # spins on the session's cores through every later test
+    q.stop()
     got = {r["conv_id"]: r for r in spark.sql("SELECT * FROM assembled_docs").collect()}
     batch_rows = tsrc.read_transcripts(spark, corpus_path).collect()
     convs = {}
@@ -195,6 +199,10 @@ def test_stateful_assembly_dedupes_redelivered_turns(spark, tmp_path):
         .start()
     )
     q.awaitTermination(180)
+    # with a processing-time state timeout the availableNow query keeps
+    # running empty micro-batches and never ends on its own: stop it, or it
+    # spins on the session's cores through every later test
+    q.stop()
     got = {r["conv_id"]: r for r in spark.sql("SELECT * FROM dedup_docs").collect()}
     assert set(got) == {f"conv-{c}" for c in range(3)}
     for c in range(3):

@@ -11,13 +11,16 @@ Measures, per core, on the real bench corpus:
 
 Usage:  python tools/kernel_bench.py [n_turns]          (default 60000)
 
-These per-core numbers multiply almost 1:1 into Spark-stage throughput
-(the narrow stage is kernel-bound with near-perfect overlap — see
-BENCH/DRIFT.md "16 cores x per-core ~= measured peak"), so A/B-ing a kernel
-change here is the fast feedback loop; the full ``bench.py`` run is the
-driver-identical confirmation.  When comparing two implementations,
-interleave them ABBA in one process (see the r4/r5 commit messages) —
-back-to-back runs of this script can differ 2x on this shared microVM.
+These per-core numbers do NOT multiply 1:1 into Spark-stage throughput on
+a 4-core host: the traced perfbench run (``perfbench/run.py --trace 1``)
+measures ``turns.kernel_share`` — kernel core time over narrow-stage core
+time — at 0.08–0.11 before the reused-worker bootstrap (``worker.py``) and
+0.16–0.26 after it, so most of the stage's core time is spent outside these
+kernels.  A kernel A/B here is the fast feedback loop for kernel cost; the
+traced perfbench run shows how much of it reaches the stage.  When
+comparing two implementations, interleave them ABBA in one process (see
+the r4/r5 commit messages) — back-to-back runs of this script can differ
+2x on this shared microVM.
 """
 from __future__ import annotations
 
