@@ -328,40 +328,45 @@ def assemble_documents_from_input(
 
 def explode_spans(docs_out: DataFrame) -> DataFrame:
     """Document rows → span table (abstract + sections + references start),
-    one row per detected span with stable ``(turn_idx, pos)`` coordinates."""
-    section_spans = (
-        docs_out.select(
-            "conv_id", "bucket", F.posexplode("sections").alias("ordinal", "s")
-        )
-        .select(
-            "conv_id",
-            "bucket",
-            (F.col("ordinal") + F.lit(2)).alias("span_idx"),
+    one row per detected span with stable ``(turn_idx, pos)`` coordinates.
+
+    One projection over one scan of ``docs_out``: each document's abstract
+    entry (when it has one) and its section entries are built as one array
+    of span structs and inlined, so the docs input is read — and, on the
+    lazy path, its assembly computed — once.
+    """
+    null_int = F.lit(None).cast("int")
+    abstract = F.filter(
+        F.array(
+            F.struct(
+                F.lit(1).alias("span_idx"),
+                F.lit("abstract").alias("span_type"),
+                null_int.alias("start_turn"),
+                null_int.alias("start_pos"),
+                null_int.alias("end_turn"),
+                null_int.alias("end_pos"),
+                F.lit("Abstract").alias("title"),
+                F.lit(None).cast("string").alias("number"),
+            )
+        ),
+        lambda _: F.col("abstract_text").isNotNull(),
+    )
+    sections = F.transform(
+        F.coalesce("sections", F.array()),
+        lambda s, i: F.struct(
+            (i + 2).alias("span_idx"),
             F.lit("section").alias("span_type"),
-            F.col("s.start.turn_idx").alias("start_turn"),
-            F.col("s.start.pos").alias("start_pos"),
-            F.col("s.end.turn_idx").alias("end_turn"),
-            F.col("s.end.pos").alias("end_pos"),
-            F.col("s.title").alias("title"),
-            F.col("s.number").alias("number"),
-        )
+            s["start"]["turn_idx"].alias("start_turn"),
+            s["start"]["pos"].alias("start_pos"),
+            s["end"]["turn_idx"].alias("end_turn"),
+            s["end"]["pos"].alias("end_pos"),
+            s["title"].alias("title"),
+            s["number"].alias("number"),
+        ),
     )
-    abstract_spans = (
-        docs_out.where(F.col("abstract_text").isNotNull())
-        .select(
-            "conv_id",
-            "bucket",
-            F.lit(1).alias("span_idx"),
-            F.lit("abstract").alias("span_type"),
-            F.lit(None).cast("int").alias("start_turn"),
-            F.lit(None).cast("int").alias("start_pos"),
-            F.lit(None).cast("int").alias("end_turn"),
-            F.lit(None).cast("int").alias("end_pos"),
-            F.lit("Abstract").alias("title"),
-            F.lit(None).cast("string").alias("number"),
-        )
+    return docs_out.select(
+        "conv_id", "bucket", F.inline(F.concat(abstract, sections))
     )
-    return abstract_spans.unionByName(section_spans)
 
 
 def reassemble_text(turns_out: DataFrame) -> DataFrame:

@@ -92,7 +92,9 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     # local[N, 2]: allow ONE task retry.  Local mode defaults to
     # maxFailures=1, so a single transient Python-worker crash (observed
@@ -116,21 +118,16 @@ def build_session(
         # at 2k batches" observation was an artifact of coarse input splits,
         # fixed by the 64m maxPartitionBytes below.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # pandas-UDF stages want fine-grained input splits so every core has
-        # multiple waves in flight (64MB splits ≈ 4 tasks/core on the bench
-        # corpus); on a real cluster this is the default parquet split size
+        # File scans keep Spark's byte-based split sizing: splits of up to
+        # 64MB (the default parquet split size on a cluster), shrunk so a
+        # small input still gets about defaultParallelism splits, one per
+        # core.  Every task costs a fixed engine overhead whatever its
+        # size — measured on a 4-core host: 40–90 ms of deserialization per
+        # write task, ~4 ms per read-only task — so a small scan split
+        # finer than the cores buys no parallelism.  With 4×cores splits
+        # per scan (minPartitionNum), a cold run_pipeline on the 25k-turn
+        # benchmark input ran 123 tasks; with byte-based splits it runs 35.
         .config("spark.sql.files.maxPartitionBytes", "64m")
-        # floor scan parallelism at 4 waves per core: a scan whose byte-based
-        # split count lands just above a small multiple of the core count
-        # (e.g. 19 splits on 8 cores) schedules as mostly-idle final waves —
-        # measured 22% of narrow-stage wall at local[8] lost to that wave
-        # quantization (10.31s → 7.99s with 32 splits).  The floor is derived
-        # from the session's core count, so it scales with the cluster and is
-        # inert at lake scale where byte-based split counts dominate anyway.
-        .config(
-            "spark.sql.files.minPartitionNum",
-            os.environ.get("SPARK_GRAFT_MIN_SCAN_PARTITIONS", str(cores * 4)),
-        )
         # zstd: measured identical write wall-time vs snappy on this host but
         # ~30% smaller output (973MB vs 1374MB on the bench pipeline) — at
         # lake scale that is 30% less stored and downstream-scanned bytes

@@ -3,6 +3,8 @@ no shuffle in the narrow stage, exactly one exchange feeding the wide stage,
 broadcast where a broadcast was asked for, filter/column pushdown into scans.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -197,3 +199,35 @@ def test_routed_pipeline_fast_path_single_exchange(spark, corpus):
         spark, corpus, output_dir=None, num_buckets=8, skew_turn_threshold=32768
     )["docs"]
     assert _plan(docs).count("Exchange hashpartitioning") == 1
+
+
+def test_lazy_spans_run_each_python_stage_once(spark):
+    """The lazy spans frame reads the docs frame once: its plan holds one
+    narrow-stage and one assembly ``MapInPandas``, not a second copy of
+    both."""
+    from scientific_papers_ocr_spark import pipeline
+
+    corpus6 = tsrc.corpus_dataframe(spark, num_convs=6, seed=11)
+    spans = pipeline.run_pipeline(spark, corpus6, output_dir=None, num_buckets=8)["spans"]
+    plan = _plan(spans)
+    assert plan.count("MapInPandas") == 2, plan
+
+
+def test_small_bucketed_scan_is_not_over_split(spark, tmp_path):
+    """A few-MB, 16-file bucket-partitioned table scans in at most one split
+    per core: small scans keep Spark's byte-based split sizing."""
+    from scientific_papers_ocr_spark import fixtures, pipeline
+
+    path = str(tmp_path / "transcripts")
+    corpus = fixtures.spark_corpus(spark, num_convs=200, seed=5, turns_per_conv=40)
+    tsrc.write_partitioned(pipeline.add_bucket(corpus, 16), path)
+    files = [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert len(files) == 16
+    assert 1 << 20 < sum(os.path.getsize(f) for f in files) < 16 << 20
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
