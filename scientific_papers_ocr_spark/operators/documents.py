@@ -1,20 +1,25 @@
 """Per-conversation wide stage: segmentation + reassembly (SURVEY.md §7
 stage 4) — the pipeline's single shuffle.
 
-One exchange on ``bucket`` (a deterministic function of ``conv_id``) plus
-``sortWithinPartitions(conv_id, turn_idx)`` delivers each conversation's
-per-turn records whole and turn-ordered (the sort is load-bearing); one
-``mapInPandas`` walks the sorted batches, splitting conversations itself
-with a cross-batch carry, and runs the oracle segmentation + document
-assembly.
+Both turns-table layouts feed one sorted-stream assembler.  Its input is a
+tagged per-turn frame: tag 0 rows carry the immutable input text, tag 1
+(verdict) rows carry the repaired text or null, the status and the
+metadata.  Under ``store_page_text="always"`` every row is a verdict row
+that carries its own page text.  One exchange on ``bucket`` (a
+deterministic function of ``conv_id``) plus ``sortWithinPartitions(conv_id,
+turn_idx, tag)`` delivers each conversation whole and turn-ordered, with a
+turn's input row just before its verdict row (the sort is load-bearing).
+One ``mapInPandas`` walks the sorted Arrow batches, splits conversations
+itself with a cross-batch carry, merges each turn's rows and runs the
+oracle segmentation + document assembly.
 
 Scale notes (100 TB / 10^12 turns):
-- the map side emits compact per-turn records (page text + status), not raw
-  payload copies;
+- only the assembly columns (page text, status, metadata) enter the
+  shuffle; block streams and clean text stay in the narrow output table;
 - a conversation must fit in one executor's memory — same contract as the
-  reference, whose segmentation is whole-document by construction.  For
-  pathological mega-conversations, ``prune_for_assembly`` (below) bounds what
-  enters the shuffle: only the columns segmentation needs.
+  reference, whose segmentation is whole-document by construction.
+  Mega-conversations are routed to ``segment_distributed`` instead
+  (``pipeline.run_pipeline``'s ``skew_turn_threshold``).
 """
 
 from __future__ import annotations
@@ -27,15 +32,6 @@ from pyspark.sql import DataFrame, functions as F
 from .. import schemas, worker
 from ..oracle import assembly, segmentation, textnorm
 from . import fastjson
-
-
-def prune_for_assembly(turns_out: DataFrame) -> DataFrame:
-    """Column-prune the per-turn table to the assembly inputs before the
-    shuffle (page text, status, metadata) — everything else (block streams,
-    clean text) stays in the narrow output table and never shuffles."""
-    return turns_out.select(
-        "conv_id", "turn_idx", "page_text", "status", "meta_json", "bucket"
-    )
 
 
 def _assemble_rows(
@@ -101,78 +97,86 @@ def _assemble_rows(
     }
 
 
-def _assemble_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas adapter (reference implementation; the production path
-    is ``assemble_documents``'s batched mapInPandas)."""
-    pdf = pdf.sort_values("turn_idx")
-    row = _assemble_rows(
-        pdf["conv_id"].iloc[0],
-        int(pdf["bucket"].iloc[0]),
-        [t if t is not None else "" for t in pdf["page_text"]],
-        list(pdf["meta_json"]),
-    )
-    return pd.DataFrame({k: [v] for k, v in row.items()})
-
-
-def assemble_documents_grouped(turns_out: DataFrame) -> DataFrame:
-    """Per-conv assembly via ``groupBy().applyInPandas`` — semantically the
-    spec, but pays ~10ms/group framing overhead (measured), which dominates
-    when conversations are small.  Kept for A/B testing against the batched
-    path below."""
-    return (
-        prune_for_assembly(turns_out)
-        .groupBy("conv_id")
-        .applyInPandas(_assemble_group, schema=schemas.DOCS_OUT)
+def _verdict_rows(turns_out: DataFrame) -> DataFrame:
+    """Tag-1 rows of the tagged assembly frame, column-pruned to what
+    assembly reads before the shuffle."""
+    return turns_out.select(
+        "conv_id",
+        F.col("turn_idx").cast("int").alias("turn_idx"),
+        F.lit(1).alias("tag"),
+        "page_text",
+        "status",
+        "meta_json",
+        "bucket",
     )
 
 
-def assemble_documents(turns_out: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Per-turn records → one document row per conversation.
+def _emit_documents(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One document row per conversation of a sorted batch that holds only
+    whole conversations."""
+    rows = []
+    # merge (tag 0, tag 1) row pairs per turn: effective page text is the
+    # verdict's repaired text when present, else the input text
+    cids = pdf["conv_id"].values
+    tags = pdf["tag"].values
+    texts = pdf["page_text"].values
+    metas = pdf["meta_json"].values
+    buckets = pdf["bucket"].values
+    lo = 0
+    for i in range(1, len(cids) + 1):
+        if i == len(cids) or cids[i] != cids[lo]:
+            pages: list[str] = []
+            meta_cells: list = []
+            # pd.isna, not `is not None`: Arrow renders a nullable int
+            # column as float64 + NaN, and `NaN is not None` is True — an
+            # identity guard would crash in int(NaN) instead of falling
+            # back (a null conv_id makes crc32 null upstream)
+            bucket = 0 if pd.isna(buckets[lo]) else int(buckets[lo])
+            j = lo
+            while j < i:
+                if tags[j] == 0:
+                    base = texts[j] if texts[j] is not None else ""
+                    if j + 1 < i and tags[j + 1] == 1:
+                        v = texts[j + 1]
+                        pages.append(v if v is not None else base)
+                        meta_cells.append(metas[j + 1])
+                        if not pd.isna(buckets[j + 1]):
+                            bucket = int(buckets[j + 1])
+                        j += 2
+                    else:  # verdict row missing (shouldn't happen)
+                        pages.append(base)
+                        meta_cells.append(None)
+                        j += 1
+                else:  # verdict row without an input row: its own page text
+                    pages.append(texts[j] if texts[j] is not None else "")
+                    meta_cells.append(metas[j])
+                    if not pd.isna(buckets[j]):
+                        bucket = int(buckets[j])
+                    j += 1
+            rows.append(_assemble_rows(cids[lo], bucket, pages, meta_cells))
+            lo = i
+    return pd.DataFrame(rows)
 
-    Physical strategy: hash-repartition on ``bucket`` +
-    ``sortWithinPartitions(conv_id, turn_idx)`` + ONE ``mapInPandas`` that
-    walks each Arrow batch and splits conversations itself, carrying the
-    trailing (possibly batch-straddling) conversation into the next batch.
-    Same single shuffle as ``applyInPandas``, but per-conversation overhead
-    drops from per-group protocol framing to a pandas slice — ~10x faster on
-    small-conversation corpora (measured on the bench corpus).
 
-    The exchange key is ``bucket`` — a deterministic function of ``conv_id``
-    (``crc32(conv_id) % num_buckets``, see ``pipeline.add_bucket``) — so
-    conversations still land whole in one partition, and the output rows
-    leave the stage ALREADY clustered on the sink's partition key: the docs
-    (and downstream spans) partitioned writes need no second exchange
-    (``write_partitioned(..., clustered=True)``).  One partitioning serves
-    the shuffle, the sinks, and the resume protocol's commit granularity.
-    At scale the parallelism ceiling of the wide stage is ``num_buckets`` —
-    size it so a bucket is a few hundred MB (the same contract as any
-    bucketed table layout).
+def _assemble_sorted(tagged: DataFrame) -> DataFrame:
+    """The one assembler: exchange the tagged frame on ``bucket``, sort
+    each partition by ``(conv_id, turn_idx, tag)``, and walk the sorted
+    Arrow batches in one ``mapInPandas``, carrying the trailing (possibly
+    batch-straddling) conversation into the next batch.
+
+    Crossing the Python boundary once per Arrow batch instead of once per
+    conversation group (``applyInPandas``) saves ~10 ms of framing per
+    conversation (measured on the bench corpus).  ``bucket`` is the sinks'
+    partition key, so the output rows leave the stage already clustered on
+    it and the partitioned docs and spans writes need no second exchange
+    (``write_partitioned(..., clustered=True)``).  At scale the wide stage's
+    parallelism ceiling is ``num_buckets``: size it so a bucket is a few
+    hundred MB, like any bucketed table layout.
     """
-    pruned = prune_for_assembly(turns_out)
 
     def process(batches):
         worker.bootstrap()
         carry: pd.DataFrame | None = None
-
-        def assemble_span(pdf: pd.DataFrame, lo: int, hi: int) -> dict:
-            cid = pdf["conv_id"].iat[lo]
-            return _assemble_rows(
-                cid,
-                int(pdf["bucket"].iat[lo]),
-                [t if t is not None else "" for t in pdf["page_text"].iloc[lo:hi]],
-                list(pdf["meta_json"].iloc[lo:hi]),
-            )
-
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = []
-            cids = pdf["conv_id"].values
-            lo = 0
-            for i in range(1, len(cids) + 1):
-                if i == len(cids) or cids[i] != cids[lo]:
-                    rows.append(assemble_span(pdf, lo, i))
-                    lo = i
-            return pd.DataFrame(rows)
-
         for pdf in batches:
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
@@ -188,39 +192,36 @@ def assemble_documents(turns_out: DataFrame, num_partitions: int | None = None) 
                 split -= 1
             carry = pdf.iloc[split:].reset_index(drop=True)
             if split:
-                yield emit(pdf.iloc[:split])
+                yield _emit_documents(pdf.iloc[:split])
         if carry is not None and len(carry):
-            yield emit(carry)
+            yield _emit_documents(carry)
 
-    arranged = (
-        pruned.repartition(num_partitions, "bucket")
-        if num_partitions
-        else pruned.repartition("bucket")
-    ).sortWithinPartitions("conv_id", "turn_idx")
-    return arranged.mapInPandas(process, schema=schemas.DOCS_OUT)
+    return (
+        tagged.repartition("bucket")
+        .sortWithinPartitions("conv_id", "turn_idx", "tag")
+        .mapInPandas(process, schema=schemas.DOCS_OUT)
+    )
+
+
+def assemble_documents(turns_out: DataFrame) -> DataFrame:
+    """Per-turn records that carry their own page text
+    (``store_page_text="always"``) → one document row per conversation."""
+    return _assemble_sorted(_verdict_rows(turns_out))
 
 
 def assemble_documents_from_input(
-    transcripts_df: DataFrame,
-    verdicts_df: DataFrame,
-    num_partitions: int | None = None,
+    transcripts_df: DataFrame, verdicts_df: DataFrame
 ) -> DataFrame:
     """Single-shuffle assembly for the 100 TB table layout where the turns
-    table stores ``page_text`` only for REPAIRED turns (never a second copy
-    of the immutable input text).
+    table stores ``page_text`` only for REPAIRED turns
+    (``store_page_text="repaired_only"``, never a second copy of the
+    immutable input text).
 
-    Physical strategy: tag-union the input text rows (tag 0) with the small
-    verdict rows (tag 1, repaired text or null), hash-repartition ONCE on
-    ``bucket`` (a deterministic function of ``conv_id`` — both sides carry
-    the same value by the ``add_bucket``/``extract_turns`` contract, so
-    conversations still co-locate whole), ``sortWithinPartitions(conv_id,
-    turn_idx, tag)``, and merge pairs inside the same batched carry pass as
-    ``assemble_documents`` — page bytes cross the exchange exactly once, and
-    a join (which would shuffle the text a second time for the join hash
-    plus again for the assembly partitioning) never happens.  This is a
-    hand-rolled shuffle-merge join exploiting that both sides share the
-    partitioning key, and the output leaves the stage clustered on the
-    sinks' partition key (``write_partitioned(..., clustered=True)``).
+    The input text rows (tag 0) are tag-unioned with the verdict rows and
+    assembled in one pass: page bytes cross the exchange exactly once.  This
+    is a hand-rolled shuffle-merge join that exploits both sides carrying
+    the same ``bucket`` (the ``add_bucket``/``extract_turns`` contract); a
+    real join would shuffle the text a second time for the join hash.
 
     ``transcripts_df`` must carry the ``bucket`` column (``add_bucket``).
     """
@@ -240,90 +241,7 @@ def assemble_documents_from_input(
         F.lit(None).cast("string").alias("meta_json"),
         F.col("bucket").cast("int").alias("bucket"),
     )
-    verdicts = verdicts_df.select(
-        "conv_id",
-        F.col("turn_idx").cast("int").alias("turn_idx"),
-        F.lit(1).alias("tag"),
-        "page_text",
-        "status",
-        "meta_json",
-        "bucket",
-    )
-    unioned = inputs.unionByName(verdicts)
-
-    def process(batches):
-        worker.bootstrap()
-        carry: pd.DataFrame | None = None
-
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = []
-            # merge (tag 0, tag 1) row pairs per turn: effective page text is
-            # the verdict's repaired text when present, else the input text
-            cids = pdf["conv_id"].values
-            tags = pdf["tag"].values
-            texts = pdf["page_text"].values
-            metas = pdf["meta_json"].values
-            buckets = pdf["bucket"].values
-            lo = 0
-            for i in range(1, len(cids) + 1):
-                if i == len(cids) or cids[i] != cids[lo]:
-                    pages: list[str] = []
-                    meta_cells: list = []
-                    # pd.isna, not `is not None`: Arrow renders a nullable int
-                    # column as float64 + NaN, and `NaN is not None` is True —
-                    # an identity guard would crash in int(NaN) instead of
-                    # falling back (a null conv_id makes crc32 null upstream)
-                    bucket = 0 if pd.isna(buckets[lo]) else int(buckets[lo])
-                    j = lo
-                    while j < i:
-                        if tags[j] == 0:
-                            base = texts[j] if texts[j] is not None else ""
-                            if j + 1 < i and tags[j + 1] == 1:
-                                v = texts[j + 1]
-                                pages.append(v if v is not None else base)
-                                meta_cells.append(metas[j + 1])
-                                if not pd.isna(buckets[j + 1]):
-                                    bucket = int(buckets[j + 1])
-                                j += 2
-                            else:  # verdict row missing (shouldn't happen)
-                                pages.append(base)
-                                meta_cells.append(None)
-                                j += 1
-                        else:  # orphan verdict row
-                            pages.append(texts[j] if texts[j] is not None else "")
-                            meta_cells.append(metas[j])
-                            if not pd.isna(buckets[j]):
-                                bucket = int(buckets[j])
-                            j += 1
-                    rows.append(
-                        _assemble_rows(cids[lo], bucket, pages, meta_cells)
-                    )
-                    lo = i
-            return pd.DataFrame(rows)
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            cids = pdf["conv_id"].values
-            last = cids[-1]
-            split = len(cids)
-            while split > 0 and cids[split - 1] == last:
-                split -= 1
-            carry = pdf.iloc[split:].reset_index(drop=True)
-            if split:
-                yield emit(pdf.iloc[:split])
-        if carry is not None and len(carry):
-            yield emit(carry)
-
-    arranged = (
-        unioned.repartition(num_partitions, "bucket")
-        if num_partitions
-        else unioned.repartition("bucket")
-    ).sortWithinPartitions("conv_id", "turn_idx", "tag")
-    return arranged.mapInPandas(process, schema=schemas.DOCS_OUT)
+    return _assemble_sorted(inputs.unionByName(_verdict_rows(verdicts_df)))
 
 
 def explode_spans(docs_out: DataFrame) -> DataFrame:

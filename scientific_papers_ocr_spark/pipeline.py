@@ -5,7 +5,9 @@ Topology (one job, one shuffle):
     read transcripts
       → [narrow] fused per-turn tokenize/verify/repair  (mapInPandas)
       → write turns table (partitioned by bucket)
-      → [wide]  exchange on bucket → per-conv assembly (mapInPandas)
+      → [wide]  exchange on bucket → per-conv assembly (one mapInPandas
+                serving both turns-table layouts; mega-conversations routed
+                to the distributed assembler)
       → write docs + spans tables (partitioned by bucket)
       → commit lineage rows (counts + checksum per bucket, one file)
 
@@ -22,7 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schemas
-from .operators import documents, turns
+from .operators import documents, segment_distributed, turns
 from .sources import transcripts as tsrc
 
 
@@ -82,24 +84,49 @@ def _probe_big_ids(src: DataFrame, threshold: int | None) -> DataFrame | None:
     return candidates if candidates.limit(1).count() > 0 else None
 
 
-def _assemble_routed(turns_src: DataFrame, big_ids: DataFrame | None) -> DataFrame:
-    """Route conversations to the right assembler: the batched
-    whole-conversation path for the common case, the distributed
-    (boundary-election) path for mega-conversations whose single-group state
-    would straggle or OOM an executor at scale.
+def _assemble(
+    inputs: DataFrame,
+    verdicts: DataFrame,
+    big_ids: DataFrame | None,
+    store_page_text: str,
+) -> DataFrame:
+    """Route each conversation of the turns table ``verdicts`` to its
+    assembler: the batched whole-conversation path, or, for the oversized
+    conv_ids in the small broadcastable ``big_ids``, the distributed
+    (boundary-election) path whose per-task state stays bounded.  None
+    keeps the plan the single-exchange fast path.  The layout decides only
+    whether the bucketed ``inputs`` join the batched assembler and whether
+    big conversations get their page text from an equi-join bounded to the
+    skew tail."""
+    with_input = store_page_text == "repaired_only"
 
-    ``big_ids`` is the (small, broadcastable) set of oversized conv_ids; None
-    or empty means everything takes the fast path and the plan stays
-    single-exchange.  Parity of the two paths is tested in
-    tests/test_distributed_segmentation.py and tests/test_skew.py.
-    """
+    def batched(inp: DataFrame, v: DataFrame) -> DataFrame:
+        if with_input:
+            return documents.assemble_documents_from_input(inp, v)
+        return documents.assemble_documents(v)
+
     if big_ids is None:
-        return documents.assemble_documents(turns_src)
-    from .operators import segment_distributed
-
-    small = turns_src.join(F.broadcast(big_ids), on="conv_id", how="left_anti")
-    big = turns_src.join(F.broadcast(big_ids), on="conv_id", how="left_semi")
-    return documents.assemble_documents(small).unionByName(
+        return batched(inputs, verdicts)
+    ids = F.broadcast(big_ids)
+    small_in, small_v = (
+        f.join(ids, on="conv_id", how="left_anti") for f in (inputs, verdicts)
+    )
+    big_in, big = (
+        f.join(ids, on="conv_id", how="left_semi") for f in (inputs, verdicts)
+    )
+    if with_input:
+        big = (
+            big.withColumnRenamed("page_text", "repaired")
+            .join(
+                big_in.select(
+                    "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "text"
+                ),
+                on=["conv_id", "turn_idx"],
+            )
+            .withColumn("page_text", F.coalesce("repaired", "text"))
+            .drop("repaired", "text")
+        )
+    return batched(small_in, small_v).unionByName(
         segment_distributed.assemble_documents_distributed(big)
     )
 
@@ -128,28 +155,28 @@ def run_pipeline(
     ``skew_turn_threshold``: conversations with at least this many turns are
     assembled by the distributed (per-section) path instead of the
     whole-conversation path.  The decision mirrors how AQE re-plans from
-    runtime statistics and is costed accordingly: with ``output_dir`` set the
-    probe is a conv_id-only columnar scan of the turns table this job just
-    materialised (statistics are free once the narrow stage has committed);
-    only the fully-lazy no-output path pays a column-pruned count over the
-    raw input.  When no conversation crosses the threshold the plan is
-    exactly the single-exchange fast path.  None disables routing.
+    runtime statistics: the probe is one column-pruned (conv_id-only) count
+    over the input, which with ``output_dir`` set runs on a driver thread
+    concurrently with the narrow stage's write.  When no conversation
+    crosses the threshold the plan is exactly the single-exchange fast
+    path.  None disables routing.
 
     ``store_page_text="repaired_only"``: the 100 TB table layout — the turns
     table stores ``page_text`` only where column repair changed it, never a
     second copy of the immutable input text (roughly halves turns-table
     bytes and the narrow stage's Python→JVM Arrow stream).  Assembly then
-    merges the input text back in with a tag-union single-shuffle pass
-    (``assemble_documents_from_input``); the lineage checksum covers ids,
-    statuses and repaired content (the unchanged input is content-addressed
-    by the source table itself).  Mega-conversations still route to the
-    distributed assembler: their effective page text is reconstructed with a
-    join bounded to the skew tail.
+    merges the input text back in: the same single-shuffle batched
+    assembler as the default layout, fed the input rows tag-unioned with
+    the verdict rows (``assemble_documents_from_input``).  The lineage
+    checksum covers ids, statuses and repaired content (the unchanged input
+    is content-addressed by the source table itself).  Mega-conversations
+    still route to the distributed assembler: their effective page text is
+    reconstructed with a join bounded to the skew tail.
 
     The default stays ``"always"`` because it is the right plan for the
     LAZY (``output_dir=None``) path — nothing is materialised there, so the
     slim layout saves no bytes while its read-side tag-union merge would add
-    a pass; materialising deployments (and the graded bench) should pass
+    a pass; materialising deployments (and the benchmark) should pass
     ``"repaired_only"``, which is the 100 TB layout.  The two modes are
     byte-identical on every output (tests/test_storage_modes.py).
 
@@ -184,39 +211,13 @@ def run_pipeline(
         df.drop("bucket"), num_buckets=num_buckets, page_text_mode=store_page_text
     )
 
-    def assemble(turns_src: DataFrame, big_ids: DataFrame | None) -> DataFrame:
-        if store_page_text == "repaired_only":
-            if big_ids is None:
-                return documents.assemble_documents_from_input(df, turns_src)
-            # skew tail only: reconstruct effective page text for the few
-            # oversized convs with an equi-join (bounded — the tail is tiny),
-            # route them to the distributed assembler; everything else takes
-            # the single-shuffle tag-union merge
-            from .operators import segment_distributed
-
-            small_in = df.join(F.broadcast(big_ids), on="conv_id", how="left_anti")
-            small_v = turns_src.join(F.broadcast(big_ids), on="conv_id", how="left_anti")
-            big_in = (
-                df.join(F.broadcast(big_ids), on="conv_id", how="left_semi")
-                .select("conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "text")
-            )
-            big_v = turns_src.join(F.broadcast(big_ids), on="conv_id", how="left_semi")
-            effective_big = (
-                big_v.withColumnRenamed("page_text", "repaired")
-                .join(big_in, on=["conv_id", "turn_idx"])
-                .withColumn("page_text", F.coalesce("repaired", "text"))
-                .drop("repaired", "text")
-            )
-            return documents.assemble_documents_from_input(small_in, small_v).unionByName(
-                segment_distributed.assemble_documents_distributed(effective_big)
-            )
-        return _assemble_routed(turns_src, big_ids)
-
     if not output_dir:
         # lazy path: nothing is materialised, so conversation sizes can only
         # come from the raw input — one column-pruned (conv_id-only) count
         # job that never touches the pandas narrow stage
-        docs_out = assemble(turns_out, _probe_big_ids(df, skew_turn_threshold))
+        docs_out = _assemble(
+            df, turns_out, _probe_big_ids(df, skew_turn_threshold), store_page_text
+        )
         return {
             "turns": turns_out,
             "docs": docs_out,
@@ -317,7 +318,7 @@ def run_pipeline(
         probe_thread.join()
         if "err" in probe_box:
             raise probe_box["err"]
-        docs_out = assemble(fresh_turns, probe_box["ids"])
+        docs_out = _assemble(df, fresh_turns, probe_box["ids"], store_page_text)
         out_schema["docs"] = docs_out.schema
         tsrc.write_partitioned(docs_out, os.path.join(output_dir, "docs"), clustered=True)
         all_docs = spark.read.schema(out_schema["docs"]).parquet(
@@ -347,9 +348,7 @@ def run_pipeline(
     # every output is committed; drop the skew-path planning caches so
     # repeated run_pipeline calls in a long-lived session don't accumulate
     # cached partitions in executor memory
-    from .operators import segment_distributed as _segdist
-
-    _segdist.release_planning_caches()
+    segment_distributed.release_planning_caches()
     return {
         name: spark.read.schema(out_schema[name]).parquet(
             os.path.join(output_dir, name)

@@ -6,7 +6,8 @@ actually drop the unchanged page bytes."""
 import pytest
 from pyspark.sql import functions as F
 
-from scientific_papers_ocr_spark import fixtures, pipeline
+from scientific_papers_ocr_spark import fixtures, pipeline, schemas
+from scientific_papers_ocr_spark.operators import documents as docops, turns as turnops
 
 
 @pytest.fixture(scope="module")
@@ -95,21 +96,61 @@ def test_repaired_only_resume_restores_dropped_bucket(spark, corpus, tmp_path_fa
     assert resumed["lineage"].select("bucket").distinct().count() == 8
 
 
+def _docs_by_conv(docs) -> dict:
+    """Every DOCS_OUT column of every document, keyed by conv_id (one
+    document per conversation)."""
+    rows = docs.collect()
+    out = {r["conv_id"]: r.asDict(recursive=True) for r in rows}
+    assert len(out) == len(rows)
+    return out
+
+
 def test_repaired_only_with_skew_routing_matches_default(spark):
-    """Oversized convs reconstruct effective text via the bounded join and
-    route to the distributed assembler; output equals the default mode."""
+    """Oversized convs route to the distributed assembler — under
+    repaired_only after reconstructing effective text via the bounded join —
+    and every output column equals the unrouted default mode, on both
+    turns-table layouts."""
     zipf = fixtures.spark_corpus(spark, 8, seed=42, zipf_max_turns=60).cache()
-    routed = pipeline.run_pipeline(
-        spark, zipf, output_dir=None, num_buckets=8,
-        store_page_text="repaired_only", skew_turn_threshold=10,
-    )["docs"]
-    default = pipeline.run_pipeline(
-        spark, zipf, output_dir=None, num_buckets=8,
-        skew_turn_threshold=None,
-    )["docs"]
-    got = {r["conv_id"]: (r["transcription"], r["n_turns"]) for r in routed.collect()}
-    want = {r["conv_id"]: (r["transcription"], r["n_turns"]) for r in default.collect()}
-    assert got == want
+    want = _docs_by_conv(
+        pipeline.run_pipeline(
+            spark, zipf, output_dir=None, num_buckets=8, skew_turn_threshold=None,
+        )["docs"]
+    )
+    assert set(next(iter(want.values()))) == set(schemas.DOCS_OUT.fieldNames())
+    for mode in ("repaired_only", "always"):
+        routed = pipeline.run_pipeline(
+            spark, zipf, output_dir=None, num_buckets=8,
+            store_page_text=mode, skew_turn_threshold=10,
+        )["docs"]
+        # the distributed assembler's boundary election runs window
+        # functions; the batched path has none
+        assert "Window" in routed._jdf.queryExecution().executedPlan().toString(), mode
+        assert _docs_by_conv(routed) == want, mode
+
+
+def test_layouts_match_when_conversations_straddle_batches(spark, corpus):
+    """Both layouts run the one batch-carry loop: with tiny Arrow batches,
+    conversations straddle batch boundaries on both, and the documents must
+    still be identical row for row."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        always = _docs_by_conv(
+            docops.assemble_documents(turnops.extract_turns(corpus, num_buckets=8))
+        )
+        slim = _docs_by_conv(
+            docops.assemble_documents_from_input(
+                pipeline.add_bucket(corpus, 8),
+                turnops.extract_turns(
+                    corpus, num_buckets=8, page_text_mode="repaired_only"
+                ),
+            )
+        )
+    finally:
+        spark.conf.set(key, saved)
+    assert max(d["n_turns"] for d in always.values()) > 3
+    assert slim == always
 
 
 def test_bucket_aligned_input_matches_unaligned(spark, corpus, tmp_path_factory):

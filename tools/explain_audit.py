@@ -3,7 +3,12 @@ PLANS.md — the legible evidence for the design-for-scale claims (broadcasts
 where intended, TakeOrderedAndProject for top-k, pushdown/pruning at scans,
 no CartesianProduct, bounded exchange counts).
 
-Usage: python tools/explain_audit.py [sf_dir]
+Usage: python tools/explain_audit.py [sf_dir] [plans_dir]
+
+With ``plans_dir``, each registry query's full ``explain("formatted")``
+text is also written to ``plans_dir/<query>.txt``, e.g. to diff plans
+before and after a change:
+``python tools/explain_audit.py <sf_dir> plans/before``.
 """
 
 from __future__ import annotations
@@ -51,6 +56,9 @@ def scan_info(plan: str) -> list[str]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    plans_dir = sys.argv[2] if len(sys.argv) > 2 else None
+    if plans_dir:
+        os.makedirs(plans_dir, exist_ok=True)
     spark = build_session(app_name="explain-audit", cores=8, shuffle_partitions=8)
     lines = [
         "# PLANS — physical-plan audit of every registry query",
@@ -64,7 +72,11 @@ def main() -> int:
     ]
     red_flags = []
     for name, (fn, _sql) in Q.REGISTRY.items():
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        qe = fn(spark, sf_dir)._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
+        if plans_dir:
+            with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
+                f.write(spark._jvm.PythonSQLUtils.explainString(qe, "formatted"))
         counts = summarize(plan)
         if "CartesianProduct" in counts:
             red_flags.append(f"{name}: CartesianProduct")
