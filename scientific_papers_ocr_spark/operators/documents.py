@@ -3,19 +3,19 @@ stage 4) — the pipeline's single shuffle.
 
 Both turns-table layouts feed one sorted-stream assembler.  Its input is a
 tagged per-turn frame: tag 0 rows carry the immutable input text, tag 1
-(verdict) rows carry the repaired text or null, the status and the
-metadata.  Under ``store_page_text="always"`` every row is a verdict row
-that carries its own page text.  One exchange on ``bucket`` (a
-deterministic function of ``conv_id``) plus ``sortWithinPartitions(conv_id,
-turn_idx, tag)`` delivers each conversation whole and turn-ordered, with a
-turn's input row just before its verdict row (the sort is load-bearing).
+(verdict) rows carry the repaired text or null and the metadata.  Under
+``store_page_text="always"`` every row is a verdict row that carries its
+own page text.  One exchange on ``bucket`` (a deterministic function of
+``conv_id``) plus ``sortWithinPartitions(conv_id, turn_idx, tag)`` delivers
+each conversation whole and turn-ordered, with a turn's input row just
+before its verdict row (the sort is load-bearing).
 One ``mapInPandas`` walks the sorted Arrow batches, splits conversations
 itself with a cross-batch carry, merges each turn's rows and runs the
 oracle segmentation + document assembly.
 
 Scale notes (100 TB / 10^12 turns):
-- only the assembly columns (page text, status, metadata) enter the
-  shuffle; block streams and clean text stay in the narrow output table;
+- only the assembly columns (page text, metadata) enter the shuffle;
+  statuses, block streams and clean text stay in the narrow output table;
 - a conversation must fit in one executor's memory — same contract as the
   reference, whose segmentation is whole-document by construction.
   Mega-conversations are routed to ``segment_distributed`` instead
@@ -105,7 +105,6 @@ def _verdict_rows(turns_out: DataFrame) -> DataFrame:
         F.col("turn_idx").cast("int").alias("turn_idx"),
         F.lit(1).alias("tag"),
         "page_text",
-        "status",
         "meta_json",
         "bucket",
     )
@@ -168,7 +167,7 @@ def _assemble_sorted(tagged: DataFrame) -> DataFrame:
     conversation group (``applyInPandas``) saves ~10 ms of framing per
     conversation (measured on the bench corpus).  ``bucket`` is the sinks'
     partition key, so the output rows leave the stage already clustered on
-    it and the partitioned docs and spans writes need no second exchange
+    it and the partitioned docs write needs no second exchange
     (``write_partitioned(..., clustered=True)``).  At scale the wide stage's
     parallelism ceiling is ``num_buckets``: size it so a bucket is a few
     hundred MB, like any bucketed table layout.
@@ -237,7 +236,6 @@ def assemble_documents_from_input(
         F.col("turn_idx").cast("int").alias("turn_idx"),
         F.lit(0).alias("tag"),
         F.col("text").alias("page_text"),
-        F.lit(None).cast("string").alias("status"),
         F.lit(None).cast("string").alias("meta_json"),
         F.col("bucket").cast("int").alias("bucket"),
     )

@@ -1,6 +1,6 @@
 """End-to-end extraction job with per-partition lineage and resume.
 
-Topology (one job, one shuffle):
+Topology (two Spark write jobs, one shuffle):
 
     read transcripts
       → [narrow] fused per-turn tokenize/verify/repair  (mapInPandas)
@@ -8,19 +8,24 @@ Topology (one job, one shuffle):
       → [wide]  exchange on bucket → per-conv assembly (one mapInPandas
                 serving both turns-table layouts; mega-conversations routed
                 to the distributed assembler)
-      → write docs + spans tables (partitioned by bucket)
-      → commit lineage rows (counts + checksum per bucket, one file)
+      → write docs table (partitioned by bucket); spans is a view over docs
+      → commit lineage rows from the driver (counts + checksum per bucket,
+        one parquet file, published by rename)
 
 Resume protocol (north rule): the driver reads committed lineage buckets and
 anti-joins them out of the input BEFORE the narrow stage, so a restart only
 processes uncommitted partitions; partition-overwrite writes make re-commits
-idempotent.
+idempotent, and a lineage file becomes visible only once it is complete.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schemas
@@ -62,6 +67,44 @@ def committed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame | Non
         return spark.read.parquet(lineage_path).select("bucket").distinct()
     except Exception:
         return None
+
+
+def _commit_lineage(table: pa.Table, lineage_path: str, append: bool) -> None:
+    """Commit the lineage rows as one parquet file, written from the driver
+    (no Spark job) under a hidden name that Spark's file listing skips, then
+    published by ``os.replace``: a crash mid-write leaves no visible
+    partial file.  ``append`` adds the file to the existing table (an empty
+    commit adds nothing); otherwise a freshly written directory replaces
+    the table."""
+    name = f"part-{uuid.uuid4()}.parquet"
+    if append:
+        if table.num_rows:
+            hidden = os.path.join(lineage_path, f".{name}")
+            pq.write_table(table, hidden)
+            os.replace(hidden, os.path.join(lineage_path, name))
+        return
+    staging = os.path.join(os.path.dirname(lineage_path), f".lineage-{uuid.uuid4()}")
+    os.makedirs(staging)
+    pq.write_table(table, os.path.join(staging, name))
+    shutil.rmtree(lineage_path, ignore_errors=True)
+    os.replace(staging, lineage_path)
+
+
+def _spans_view(docs: DataFrame) -> DataFrame:
+    """The spans table as a view over a docs frame, in ``schemas.SPANS_OUT``
+    on both paths."""
+    spans = documents.explode_spans(docs)
+    # ``CASE WHEN c IS NOT NULL THEN c END`` is the identity that Spark types
+    # as nullable (the optimizer folds it back to the bare column); one
+    # ``selectExpr`` keeps the driver-side planning to one call
+    return spans.selectExpr(
+        *(
+            f"`{c}`"
+            if spans.schema[c].nullable
+            else f"CASE WHEN `{c}` IS NOT NULL THEN `{c}` END AS `{c}`"
+            for c in schemas.SPANS_OUT.names
+        )
+    )
 
 
 def _probe_big_ids(src: DataFrame, threshold: int | None) -> DataFrame | None:
@@ -142,8 +185,19 @@ def run_pipeline(
     input_bucket_aligned: bool = False,
 ) -> dict[str, DataFrame]:
     """Run the full pipeline; when ``output_dir`` is set, materialise the
-    turns/docs/spans/lineage tables there (partitioned by bucket) and, with
-    ``resume=True``, skip buckets whose lineage rows are already committed.
+    turns and docs tables there (partitioned by bucket) and commit the
+    lineage table last, and, with ``resume=True``, skip buckets whose
+    lineage rows are already committed.  Returns the turns, docs, spans and
+    lineage frames; ``spans`` is always a view over the docs frame (with
+    ``output_dir``, over every committed bucket of the docs table, so a
+    resumed run sees all of them), in one schema on both paths.
+
+    ``output_dir`` must be a path the driver's own filesystem sees (a local
+    or mounted directory): the driver checks for the lineage table there
+    and commits it with a direct parquet write published by ``os.replace``
+    — one file, visible only once complete, no Spark job.  On resume the
+    file is added to the existing lineage table (a resume that processed no
+    bucket adds none); otherwise a freshly written directory replaces it.
 
     ``num_buckets`` is also the wide stage's parallelism ceiling: ``bucket``
     is the assembly exchange key, so at most ``num_buckets`` tasks do useful
@@ -183,9 +237,8 @@ def run_pipeline(
     One-partitioning topology: the assembly exchange key is ``bucket``
     (a deterministic function of ``conv_id``), so the docs frame leaves the
     wide stage already clustered on the sink's partition key and the docs
-    and spans partitioned writes run shuffle-free
-    (``write_partitioned(..., clustered=True)``; the spans input is a scan
-    of the bucket-partitioned docs table, clustered by construction).
+    partitioned write runs shuffle-free
+    (``write_partitioned(..., clustered=True)``).
 
     ``input_bucket_aligned=True``: the caller asserts ``transcripts_df`` is
     a scan of a table partitioned/bucketed on this same ``bucket`` key (the
@@ -221,7 +274,7 @@ def run_pipeline(
         return {
             "turns": turns_out,
             "docs": docs_out,
-            "spans": documents.explode_spans(docs_out),
+            "spans": _spans_view(docs_out),
             "lineage": lineage_rows(turns_out),
         }
 
@@ -277,8 +330,7 @@ def run_pipeline(
     # raises UNABLE_TO_INFER_SCHEMA — an empty input must flow through to an
     # empty output, not crash. The schema is known statically from the frame
     # we just wrote.
-    out_schema = {"turns": turns_out.schema}
-    all_turns = spark.read.schema(out_schema["turns"]).parquet(
+    all_turns = spark.read.schema(turns_out.schema).parquet(
         os.path.join(output_dir, "turns")
     )
     fresh_turns = (
@@ -288,20 +340,18 @@ def run_pipeline(
     )
 
     # assemble/lineage ONLY the buckets processed in this run — committed
-    # buckets keep their existing docs/spans partitions and lineage rows.
+    # buckets keep their existing docs partitions and lineage rows.
     # Lineage is the COMMIT RECORD for resume: a bucket whose lineage row is
     # durable is skipped wholesale on restart, so the lineage WRITE must be
-    # the last thing that happens — after docs and spans are on disk.  The
-    # lineage COMPUTE, however, only needs the already-committed turns
-    # table, so its scan+agg runs on a driver thread CONCURRENTLY with the
-    # docs/spans jobs (concurrent jobs from separate driver threads are a
-    # first-class Spark feature; the lineage scan is JVM-side columnar work
-    # that overlaps the Python-worker-bound assembly).  The Arrow collect is
-    # planning-sized — one row per bucket — and turns the end-of-job
-    # lineage step from a full scan+agg into a trivial 64-row write,
-    # removing a fixed serial component that does not shrink with cores.
+    # the last thing that happens — after docs are on disk.  The lineage
+    # COMPUTE, however, only needs the already-committed turns table, so
+    # its scan+agg runs on a driver thread CONCURRENTLY with the docs job
+    # (concurrent jobs from separate driver threads are a first-class Spark
+    # feature; the lineage scan is JVM-side columnar work that overlaps the
+    # Python-worker-bound assembly).  The Arrow collect is planning-sized —
+    # one row per bucket — so the commit itself is a driver-side file write,
+    # not a Spark job.
     lineage_out = lineage_rows(fresh_turns)
-    out_schema["lineage"] = lineage_out.schema
     lineage_box: dict = {}
 
     def _compute_lineage() -> None:
@@ -319,39 +369,25 @@ def run_pipeline(
         if "err" in probe_box:
             raise probe_box["err"]
         docs_out = _assemble(df, fresh_turns, probe_box["ids"], store_page_text)
-        out_schema["docs"] = docs_out.schema
         tsrc.write_partitioned(docs_out, os.path.join(output_dir, "docs"), clustered=True)
-        all_docs = spark.read.schema(out_schema["docs"]).parquet(
-            os.path.join(output_dir, "docs")
-        )
-        fresh_docs = (
-            all_docs.join(F.broadcast(done), on="bucket", how="left_anti")
-            if done is not None
-            else all_docs
-        )
-        spans_out = documents.explode_spans(fresh_docs)
-        out_schema["spans"] = spans_out.schema
-        tsrc.write_partitioned(spans_out, os.path.join(output_dir, "spans"), clustered=True)
     except BaseException:
         _cancel_side_jobs()
         raise
+    all_docs = spark.read.schema(docs_out.schema).parquet(os.path.join(output_dir, "docs"))
     lineage_path = os.path.join(output_dir, "lineage")
-    mode = "append" if (resume and os.path.exists(lineage_path)) else "overwrite"
+    append = resume and os.path.exists(lineage_path)
     lineage_thread.join()
     if "err" in lineage_box:
         raise lineage_box["err"]
-    # from Arrow, the commit frame is a JVM-local relation: no Python-worker
-    # tasks (a Row list would become a parallelized Python RDD), one file
-    spark.createDataFrame(lineage_box["table"], schema=out_schema["lineage"]).coalesce(
-        1
-    ).write.mode(mode).parquet(lineage_path)
+    _commit_lineage(lineage_box["table"], lineage_path, append)
     # every output is committed; drop the skew-path planning caches so
     # repeated run_pipeline calls in a long-lived session don't accumulate
     # cached partitions in executor memory
     segment_distributed.release_planning_caches()
     return {
-        name: spark.read.schema(out_schema[name]).parquet(
-            os.path.join(output_dir, name)
-        )
-        for name in ("turns", "docs", "spans", "lineage")
+        "turns": all_turns,
+        "docs": all_docs,
+        # a view over every committed bucket, so a resumed run sees them all
+        "spans": _spans_view(all_docs),
+        "lineage": spark.read.schema(lineage_out.schema).parquet(lineage_path),
     }

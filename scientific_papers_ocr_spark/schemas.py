@@ -115,18 +115,20 @@ DOCS_OUT = T.StructType(
     ]
 )
 
+# ``run_pipeline(...)["spans"]`` on both paths: the column order and
+# nullability of a bucket-partitioned parquet read-back (``bucket`` last)
 SPANS_OUT = T.StructType(
     [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("span_idx", T.IntegerType(), False),
-        T.StructField("span_type", T.StringType(), False),
+        T.StructField("conv_id", T.StringType(), True),
+        T.StructField("span_idx", T.IntegerType(), True),
+        T.StructField("span_type", T.StringType(), True),
         T.StructField("start_turn", T.IntegerType(), True),
         T.StructField("start_pos", T.IntegerType(), True),
         T.StructField("end_turn", T.IntegerType(), True),
         T.StructField("end_pos", T.IntegerType(), True),
         T.StructField("title", T.StringType(), True),
         T.StructField("number", T.StringType(), True),
+        T.StructField("bucket", T.IntegerType(), True),
     ]
 )
 

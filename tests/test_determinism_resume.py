@@ -5,11 +5,15 @@
   Spark gives no intra-group order guarantees).
 - A restart after a partial commit must skip committed buckets and converge
   to the clean-run output.
+- The lineage commit is crash-consistent: a partial commit file stays
+  hidden, and each run adds exactly one lineage file.
 """
 
 import os
 import shutil
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -126,3 +130,59 @@ def test_lineage_counters_match_turns(spark, base_df, tmp_path):
     assert sums["i"] == by_status.get("incomplete", 0)
     assert sums["m"] == sum(v for k, v in by_status.items() if k.startswith("missing"))
     assert sums["u"] == by_status.get("unverified", 0)
+
+
+def _lineage_files(out_dir):
+    return sorted(
+        f for f in os.listdir(os.path.join(out_dir, "lineage")) if f.endswith(".parquet")
+    )
+
+
+def test_hidden_partial_lineage_file_is_invisible(spark, base_df, tmp_path):
+    """A crash mid-commit leaves a partial file under a hidden name: readers
+    skip it, the bucket stays uncommitted, and the resume that commits it
+    adds exactly one file."""
+    out_dir = str(tmp_path / "out3")
+    clean = pipeline.run_pipeline(spark, base_df, output_dir=out_dir, num_buckets=8)
+    clean_docs = _docs_fingerprint(clean["docs"])
+    lineage_dir = os.path.join(out_dir, "lineage")
+    table = pq.read_table(lineage_dir)
+    buckets = sorted(table.column("bucket").to_pylist())
+    assert len(buckets) >= 2
+
+    # lose the victim bucket's commit, then crash while re-committing it
+    victim = buckets[0]
+    kept = table.filter(pc.not_equal(table.column("bucket"), victim))
+    shutil.rmtree(lineage_dir)
+    os.makedirs(lineage_dir)
+    pq.write_table(kept, os.path.join(lineage_dir, "part-kept.parquet"))
+    partial_path = os.path.join(lineage_dir, ".part-crashed.parquet")
+    pq.write_table(table.slice(0, 1), partial_path)
+    with open(partial_path, "r+b") as f:
+        f.truncate(os.path.getsize(partial_path) // 2)
+
+    done = pipeline.committed_buckets(spark, lineage_dir)
+    assert sorted(r["bucket"] for r in done.collect()) == buckets[1:]
+
+    before = _lineage_files(out_dir)
+    resumed = pipeline.run_pipeline(
+        spark, base_df, output_dir=out_dir, num_buckets=8, resume=True
+    )
+    after = _lineage_files(out_dir)
+    assert len(after) == len(before) + 1 and set(before) < set(after), (before, after)
+    assert os.path.exists(partial_path)
+    lineage = resumed["lineage"]
+    assert lineage.count() == len(buckets)
+    assert sorted(r["bucket"] for r in lineage.collect()) == buckets
+    assert _docs_fingerprint(resumed["docs"]) == clean_docs
+
+
+def test_rerun_leaves_one_lineage_file(spark, base_df, tmp_path):
+    """A non-resume run replaces the lineage table: two runs into one
+    output directory leave one lineage file, one row per bucket."""
+    out_dir = str(tmp_path / "out4")
+    for _ in range(2):
+        out = pipeline.run_pipeline(spark, base_df, output_dir=out_dir, num_buckets=8)
+    assert len(_lineage_files(out_dir)) == 1
+    buckets = [r["bucket"] for r in out["lineage"].collect()]
+    assert len(buckets) == len(set(buckets)) == out["turns"].select("bucket").distinct().count()

@@ -87,6 +87,28 @@ def test_assembly_input_is_column_pruned(spark, corpus):
     assert "page_text" in projects[0], projects[0]
 
 
+@pytest.mark.parametrize("layout", ["always", "repaired_only"])
+def test_assembly_exchange_ships_no_status(spark, corpus, layout):
+    # the assembler never reads a turn's status: the tagged projections
+    # under the assembly exchange (one per union branch) must not carry it
+    from scientific_papers_ocr_spark import pipeline
+
+    bucketed = pipeline.add_bucket(corpus, 8)
+    turns_out = turnops.extract_turns(
+        bucketed.drop("bucket"), num_buckets=8, page_text_mode=layout
+    )
+    docs = (
+        docops.assemble_documents_from_input(bucketed, turns_out)
+        if layout == "repaired_only"
+        else docops.assemble_documents(turns_out)
+    )
+    after_exchange = _plan(docs).split("Exchange hashpartitioning")[1].splitlines()
+    tagged = [ln for ln in after_exchange if "Project [" in ln and " AS tag" in ln]
+    assert len(tagged) == (2 if layout == "repaired_only" else 1), after_exchange
+    for ln in tagged:
+        assert "status" not in ln, ln
+
+
 def test_topk_is_take_ordered(spark):
     df = Q.q_embedding_topk(spark, SF)
     assert "TakeOrderedAndProject" in _plan(df)

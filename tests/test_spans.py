@@ -80,6 +80,25 @@ def test_one_scan_spans_equal_two_branch_form(docs_frames, source):
     assert len(got_rows) == 7
 
 
+def test_pipeline_spans_one_schema_on_both_paths(spark, tmp_path):
+    """``run_pipeline(...)["spans"]`` is the same table, in the same schema,
+    whether planned lazily or served as a view over the written docs."""
+    from scientific_papers_ocr_spark import pipeline
+    from scientific_papers_ocr_spark.sources import transcripts as tsrc
+
+    corpus = tsrc.corpus_dataframe(spark, num_convs=6, seed=11)
+    lazy = pipeline.run_pipeline(spark, corpus, output_dir=None, num_buckets=8)["spans"]
+    written = pipeline.run_pipeline(
+        spark, corpus, output_dir=str(tmp_path / "out"), num_buckets=8
+    )["spans"]
+    for spans in (lazy, written):
+        assert [(f.name, f.dataType, f.nullable) for f in spans.schema] == [
+            (f.name, f.dataType, f.nullable) for f in schemas.SPANS_OUT
+        ]
+    rows = sorted(lazy.collect())
+    assert rows and rows == sorted(written.collect())
+
+
 def test_spans_read_docs_once(docs_frames):
     plan = docops.explode_spans(docs_frames["scan"])._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan parquet") == 1, plan

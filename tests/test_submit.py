@@ -19,6 +19,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 @pytest.mark.slow
 def test_spark_submit_py_files_end_to_end(spark, tmp_path):
     from scientific_papers_ocr_spark import fixtures
+    from scientific_papers_ocr_spark.operators import documents as docops
     from scientific_papers_ocr_spark.session import package_zip
 
     input_path = str(tmp_path / "transcripts.parquet")
@@ -57,10 +58,14 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
         proc.stdout
     )
 
-    # the job materialised the full table set, partitioned by bucket
-    for table in ("turns", "docs", "spans", "lineage"):
+    # the job materialised the turns, docs and lineage tables; spans is a
+    # view over docs, never written
+    for table in ("turns", "docs", "lineage"):
         assert os.path.exists(os.path.join(out_dir, table)), table
+    assert not os.path.exists(os.path.join(out_dir, "spans"))
     turns = spark.read.parquet(os.path.join(out_dir, "turns"))
     assert turns.count() == n_turns
     docs = spark.read.parquet(os.path.join(out_dir, "docs"))
     assert docs.count() == 12
+    spans = docops.explode_spans(docs)
+    assert spans.select("conv_id").distinct().count() == 12
