@@ -7,7 +7,7 @@ Scale design:
   oracle can reproduce signatures bit-for-bit; candidate generation is a
   band-bucket self-join (shuffle on band signature, never the O(n²) cross
   join);
-- n-gram Jaccard verifies candidates via a shingle-explode equi-join —
+- n-gram Jaccard verifies candidates by in-row shingle-array intersection —
   at 100 TB you run it only on LSH candidates, not all pairs.
 """
 
@@ -78,31 +78,17 @@ def word_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     )
 
 
-def minhash_signatures(
-    shingles: DataFrame, id_col: str = "doc_id", seeds: tuple[str, ...] = DEFAULT_SEEDS
-) -> DataFrame:
-    """Per-doc MinHash signature: one band per seed, each the min of
-    ``md5(shingle || '#' || seed)`` — a portable permutation-hash stand-in
-    reproducible in any engine with md5.  Partial aggregation (map-side
-    combine) applies because min() is algebraic."""
-    aggs = [
-        F.min(F.md5(F.concat(F.col("shingle"), F.lit("#" + s)))).alias(f"band_{i}")
-        for i, s in enumerate(seeds)
-    ]
-    return shingles.groupBy(id_col).agg(*aggs)
-
-
 def minhash_signatures_arrays(
     shingle_arrays: DataFrame,
     id_col: str = "doc_id",
     seeds: tuple[str, ...] = DEFAULT_SEEDS,
 ) -> DataFrame:
-    """``minhash_signatures`` over ``word_shingle_arrays`` output: each
-    band is ``array_min`` of the per-seed hashes computed row-locally, so
+    """Per-doc MinHash signature over ``word_shingle_arrays`` output: one
+    band per seed, each the min of ``md5(shingle || '#' || seed)`` — a
+    portable permutation-hash stand-in reproducible in any engine with md5.
+    Each band is ``array_min`` of the per-seed hashes computed row-locally, so
     the whole signature table is a NARROW projection — no explode, no
-    sort-based min aggregate, no exchange.  Identical values: ``array_min``
-    and ``min()`` share Spark's string ordering and the hashed value set is
-    the same."""
+    sort-based min aggregate, no exchange."""
     cols = [
         F.array_min(
             F.transform(
@@ -121,33 +107,22 @@ def _make_seed_hash(suffix: str):
     return h
 
 
-def lsh_band_values(
-    shingles: DataFrame,
-    id_col: str = "doc_id",
-    n_bands: int = 4,
-    rows_per_band: int = 1,
-) -> DataFrame:
-    """Classic (b × r) MinHash banding: ``n_bands * rows_per_band`` min-hashes
-    per doc, then each band's value is ``md5`` of its ``rows_per_band``
-    concatenated mins — candidates must share ALL r hashes of some band.
-
-    r=1 reduces to share-any-one-min (high recall, floods candidates at
-    corpus scale); r≥2 sharpens the S-curve so band-bucket sizes stay bounded
-    at 100 TB.  Output columns ``band_0..band_{b-1}`` feed
-    ``lsh_candidate_pairs`` unchanged."""
-    seeds = tuple(f"s{i}" for i in range(n_bands * rows_per_band))
-    sigs = minhash_signatures(shingles, id_col=id_col, seeds=seeds)
-    return _fold_bands(sigs, id_col, n_bands, rows_per_band)
-
-
 def lsh_band_values_arrays(
     shingle_arrays: DataFrame,
     id_col: str = "doc_id",
     n_bands: int = 4,
     rows_per_band: int = 1,
 ) -> DataFrame:
-    """``lsh_band_values`` over ``word_shingle_arrays`` output — the narrow
-    signature path (``minhash_signatures_arrays``), identical band values."""
+    """Classic (b × r) MinHash banding over ``word_shingle_arrays`` output:
+    ``n_bands * rows_per_band`` min-hashes per doc
+    (``minhash_signatures_arrays``), then each band's value is ``md5`` of
+    its ``rows_per_band`` concatenated mins — candidates must share ALL r
+    hashes of some band.
+
+    r=1 reduces to share-any-one-min (high recall, floods candidates at
+    corpus scale); r≥2 sharpens the S-curve so band-bucket sizes stay bounded
+    at 100 TB.  Output columns ``band_0..band_{b-1}`` feed
+    ``lsh_candidate_pairs`` unchanged."""
     seeds = tuple(f"s{i}" for i in range(n_bands * rows_per_band))
     sigs = minhash_signatures_arrays(shingle_arrays, id_col=id_col, seeds=seeds)
     return _fold_bands(sigs, id_col, n_bands, rows_per_band)
@@ -213,31 +188,28 @@ def lsh_candidate_pairs(
 
 def jaccard_pairs(
     shingles: DataFrame,
+    shingle_arrays: DataFrame,
     id_col: str = "doc_id",
     threshold: float = 0.5,
     candidates: DataFrame | None = None,
-    shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
-    """N-gram Jaccard similarity per doc pair via shingle equi-join.
+    """N-gram Jaccard similarity per doc pair.
 
-    With ``candidates`` (e.g. LSH output) the candidate set DRIVES the join —
-    candidates → id_a's shingles → equi-join id_b's shingles — so the work is
-    linear in Σ(candidate-pair shingle counts), never in the co-shingled pair
-    blowup; this ordering is what makes verification feasible at 100 TB.
-    Without ``candidates``, all co-shingled pairs are scored (test scale
-    only).
+    ``shingle_arrays`` is the ``word_shingle_arrays`` frame the exploded
+    ``shingles`` came from; the per-doc shingle counts are its narrow
+    ``size(shingles)`` projection.
 
-    ``shingle_arrays`` (the ``word_shingle_arrays`` frame the exploded
-    ``shingles`` came from) lets the per-doc size leg run as a narrow
-    ``size(shingles)`` projection instead of a count aggregate over every
-    exploded shingle — and, combined with ``candidates``, replaces the
-    shingle-level equi-join + count entirely: the candidate pair attaches
-    both docs' (distinct) shingle arrays and the intersection is computed
-    IN-ROW (``size(array_intersect(a, b))``), so no per-shingle rows are
-    ever joined, shuffled or aggregated.  Identical values: the arrays are
-    distinct per doc, so the in-row intersection size equals the count of
-    co-occurring shingle rows."""
-    if candidates is not None and shingle_arrays is not None:
+    With ``candidates`` (e.g. LSH output) only the candidate pairs are
+    scored, and no per-shingle rows are ever joined, shuffled or
+    aggregated: each pair attaches both docs' (distinct) shingle arrays and
+    the intersection is computed IN-ROW (``size(array_intersect(a, b))``).
+    The work is linear in the candidate count, never in the co-shingled pair
+    blowup; this is what makes verification feasible at 100 TB.  Without
+    ``candidates``, all co-shingled pairs are scored through a shingle
+    equi-join (test scale only).  Identical values either way: the arrays
+    are distinct per doc, so the in-row intersection size equals the count
+    of co-occurring shingle rows."""
+    if candidates is not None:
         arr_a = shingle_arrays.select(
             F.col(id_col).alias("id_a"), F.col("shingles").alias("_sh_a")
         )
@@ -256,33 +228,18 @@ def jaccard_pairs(
             .select("id_a", "id_b", jac.alias("jaccard"))
             .where(F.col("jaccard") >= threshold)
         )
-    if shingle_arrays is not None:
-        sizes = shingle_arrays.select(
-            F.col(id_col), F.size("shingles").alias("n_shingles")
+    sizes = shingle_arrays.select(F.col(id_col), F.size("shingles").alias("n_shingles"))
+    a = shingles.alias("a")
+    b = shingles.alias("b")
+    inter = (
+        a.join(b, on="shingle")
+        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .groupBy(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
         )
-    else:
-        sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
-    if candidates is not None:
-        sh_a = shingles.select(F.col(id_col).alias("id_a"), "shingle")
-        sh_b = shingles.select(F.col(id_col).alias("id_b"), "shingle")
-        inter = (
-            candidates.join(sh_a, on="id_a")
-            .join(sh_b, on=["id_b", "shingle"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-    else:
-        a = shingles.alias("a")
-        b = shingles.alias("b")
-        inter = (
-            a.join(b, on="shingle")
-            .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("size_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("size_b"))
     return (

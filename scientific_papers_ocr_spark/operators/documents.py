@@ -2,13 +2,13 @@
 stage 4) — the pipeline's single shuffle.
 
 Both turns-table layouts feed one sorted-stream assembler.  Its input is a
-tagged per-turn frame: tag 0 rows carry the immutable input text, tag 1
-(verdict) rows carry the repaired text or null and the metadata.  Under
-``store_page_text="always"`` every row is a verdict row that carries its
-own page text.  One exchange on ``bucket`` (a deterministic function of
-``conv_id``) plus ``sortWithinPartitions(conv_id, turn_idx, tag)`` delivers
-each conversation whole and turn-ordered, with a turn's input row just
-before its verdict row (the sort is load-bearing).
+tagged per-turn frame (``tagged_turns``): tag 0 rows carry the immutable
+input text, tag 1 (verdict) rows carry the repaired text or null and the
+metadata.  Under ``store_page_text="always"`` every row is a verdict row
+that carries its own page text.  One exchange on ``bucket`` (a
+deterministic function of ``conv_id``) plus ``sortWithinPartitions(conv_id,
+turn_idx, tag)`` delivers each conversation whole and turn-ordered, with a
+turn's input row just before its verdict row (the sort is load-bearing).
 One ``mapInPandas`` walks the sorted Arrow batches, splits conversations
 itself with a cross-batch carry, merges each turn's rows and runs the
 oracle segmentation + document assembly.
@@ -16,14 +16,17 @@ oracle segmentation + document assembly.
 Scale notes (100 TB / 10^12 turns):
 - only the assembly columns (page text, metadata) enter the shuffle;
   statuses, block streams and clean text stay in the narrow output table;
-- a conversation must fit in one executor's memory — same contract as the
-  reference, whose segmentation is whole-document by construction.
-  Mega-conversations are routed to ``segment_distributed`` instead
-  (``pipeline.run_pipeline``'s ``skew_turn_threshold``).
+- an ordinary conversation is segmented whole, so it must fit in one
+  Python worker — same contract as the reference, whose segmentation is
+  whole-document by construction.  Mega-conversations (``routed``, see
+  ``pipeline.run_pipeline``'s ``skew_turn_threshold``) take the same
+  exchange, sort and batch loop, but are streamed page by page through
+  ``segment_distributed.Walker`` and never held whole.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 
 import pandas as pd
@@ -31,24 +34,16 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import schemas, worker
 from ..oracle import assembly, segmentation, textnorm
-from . import fastjson
+from . import fastjson, segment_distributed
 
 
 def _assemble_rows(
-    conv_id: str,
-    bucket: int,
-    pages: list[str],
-    meta_cells: list,
+    conv_id: str, bucket: int, seg: dict, meta_json: str | None, n_turns: int
 ) -> dict:
-    """Assemble one conversation into a document row dict (pages already
-    turn-ordered)."""
-    meta = None
-    for m in meta_cells:
-        if m:
-            meta = json.loads(m)
-            break
-
-    seg = segmentation.segment_document(pages)
+    """One conversation's document row dict, from its segmentation (the
+    ``segmentation.segment_document`` result) and first non-null metadata
+    cell."""
+    meta = json.loads(meta_json) if meta_json else None
     title = (meta or {}).get("title")
     authors = assembly._author_tuples(meta)
     creation_date = (meta or {}).get("creation_date")
@@ -92,15 +87,21 @@ def _assemble_rows(
         "references": references,
         "n_sections": len(sections),
         "n_refs": len(references),
-        "n_turns": len(pages),
+        "n_turns": n_turns,
         "bucket": bucket,
     }
 
 
-def _verdict_rows(turns_out: DataFrame) -> DataFrame:
-    """Tag-1 rows of the tagged assembly frame, column-pruned to what
-    assembly reads before the shuffle."""
-    return turns_out.select(
+def tagged_turns(
+    verdicts_df: DataFrame, transcripts_df: DataFrame | None = None
+) -> DataFrame:
+    """The assembler's tagged per-turn frame, column-pruned to what assembly
+    reads before the shuffle: the verdict rows of a turns table (tag 1),
+    tag-unioned with the input text rows of ``transcripts_df`` (tag 0) when
+    the turns table stores only repaired page text
+    (``store_page_text="repaired_only"``).  ``transcripts_df`` must carry
+    the ``bucket`` column (``pipeline.add_bucket``)."""
+    verdicts = verdicts_df.select(
         "conv_id",
         F.col("turn_idx").cast("int").alias("turn_idx"),
         F.lit(1).alias("tag"),
@@ -108,60 +109,79 @@ def _verdict_rows(turns_out: DataFrame) -> DataFrame:
         "meta_json",
         "bucket",
     )
+    if transcripts_df is None:
+        return verdicts
+    if "bucket" not in transcripts_df.columns:
+        raise ValueError(
+            "assembling from input requires a 'bucket' column on "
+            "transcripts_df — apply pipeline.add_bucket(df, num_buckets) "
+            "first (this is a breaking change from the pre-r5 raw-transcripts "
+            "signature)"
+        )
+    inputs = transcripts_df.select(
+        "conv_id",
+        F.col("turn_idx").cast("int").alias("turn_idx"),
+        F.lit(0).alias("tag"),
+        F.col("text").alias("page_text"),
+        F.lit(None).cast("string").alias("meta_json"),
+        F.col("bucket").cast("int").alias("bucket"),
+    )
+    return inputs.unionByName(verdicts)
 
 
-def _emit_documents(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One document row per conversation of a sorted batch that holds only
-    whole conversations."""
-    rows = []
-    # merge (tag 0, tag 1) row pairs per turn: effective page text is the
-    # verdict's repaired text when present, else the input text
-    cids = pdf["conv_id"].values
-    tags = pdf["tag"].values
-    texts = pdf["page_text"].values
-    metas = pdf["meta_json"].values
-    buckets = pdf["bucket"].values
-    lo = 0
-    for i in range(1, len(cids) + 1):
-        if i == len(cids) or cids[i] != cids[lo]:
-            pages: list[str] = []
-            meta_cells: list = []
-            # pd.isna, not `is not None`: Arrow renders a nullable int
-            # column as float64 + NaN, and `NaN is not None` is True — an
-            # identity guard would crash in int(NaN) instead of falling
-            # back (a null conv_id makes crc32 null upstream)
-            bucket = 0 if pd.isna(buckets[lo]) else int(buckets[lo])
-            j = lo
-            while j < i:
-                if tags[j] == 0:
-                    base = texts[j] if texts[j] is not None else ""
-                    if j + 1 < i and tags[j + 1] == 1:
-                        v = texts[j + 1]
-                        pages.append(v if v is not None else base)
-                        meta_cells.append(metas[j + 1])
-                        if not pd.isna(buckets[j + 1]):
-                            bucket = int(buckets[j + 1])
-                        j += 2
-                    else:  # verdict row missing (shouldn't happen)
-                        pages.append(base)
-                        meta_cells.append(None)
-                        j += 1
-                else:  # verdict row without an input row: its own page text
-                    pages.append(texts[j] if texts[j] is not None else "")
-                    meta_cells.append(metas[j])
-                    if not pd.isna(buckets[j]):
-                        bucket = int(buckets[j])
-                    j += 1
-            rows.append(_assemble_rows(cids[lo], bucket, pages, meta_cells))
-            lo = i
-    return pd.DataFrame(rows)
+def _merge_turns(cols: tuple, lo: int, hi: int, bucket: int) -> tuple:
+    """Merge rows ``[lo, hi)`` of one conversation's sorted stream into its
+    turns: a turn's page text is its verdict row's repaired text when
+    present, else its input row's text.  Returns the turns' indices, pages
+    and metadata cells, and the conversation's bucket."""
+    tids, tags, texts, metas, buckets = cols
+    turns: list = []
+    pages: list[str] = []
+    meta_cells: list = []
+    j = lo
+    while j < hi:
+        turns.append(tids[j])
+        if tags[j] == 0:
+            base = texts[j] if texts[j] is not None else ""
+            if j + 1 < hi and tags[j + 1] == 1:
+                v = texts[j + 1]
+                pages.append(v if v is not None else base)
+                meta_cells.append(metas[j + 1])
+                if not pd.isna(buckets[j + 1]):
+                    bucket = int(buckets[j + 1])
+                j += 2
+            else:  # verdict row missing (shouldn't happen)
+                pages.append(base)
+                meta_cells.append(None)
+                j += 1
+        else:  # verdict row without an input row: its own page text
+            pages.append(texts[j] if texts[j] is not None else "")
+            meta_cells.append(metas[j])
+            if not pd.isna(buckets[j]):
+                bucket = int(buckets[j])
+            j += 1
+    return turns, pages, meta_cells, bucket
 
 
-def _assemble_sorted(tagged: DataFrame) -> DataFrame:
+def assemble_sorted(
+    tagged: DataFrame,
+    routed: dict | None = None,
+    emit=None,
+    schema=schemas.DOCS_OUT,
+) -> DataFrame:
     """The one assembler: exchange the tagged frame on ``bucket``, sort
     each partition by ``(conv_id, turn_idx, tag)``, and walk the sorted
-    Arrow batches in one ``mapInPandas``, carrying the trailing (possibly
-    batch-straddling) conversation into the next batch.
+    Arrow batches in one ``mapInPandas``.
+
+    An ordinary conversation is held back while it may continue in the
+    next batch (the carry) and then segmented whole.  A conversation in
+    ``routed`` (``conv_id`` → its elected boundary hits,
+    ``segment_distributed.elect_boundaries``) is streamed instead: each
+    batch's complete turns go to its ``segment_distributed.Walker``, and
+    only an input row whose verdict row starts the next batch is carried.
+    ``emit(walker, final)``, when given, replaces the document row of each
+    routed conversation with the rows it returns after every batch (and at
+    the conversation's end, ``final``), in ``schema``.
 
     Crossing the Python boundary once per Arrow batch instead of once per
     conversation group (``applyInPandas``) saves ~10 ms of framing per
@@ -172,40 +192,99 @@ def _assemble_sorted(tagged: DataFrame) -> DataFrame:
     parallelism ceiling is ``num_buckets``: size it so a bucket is a few
     hundred MB, like any bucketed table layout.
     """
+    routed = routed or {}
+
+    def first_bucket(buckets, i: int) -> int:
+        # pd.isna, not `is not None`: Arrow renders a nullable int column as
+        # float64 + NaN, and `NaN is not None` is True — an identity guard
+        # would crash in int(NaN) instead of falling back (a null conv_id
+        # makes crc32 null upstream)
+        return 0 if pd.isna(buckets[i]) else int(buckets[i])
+
+    def walked_rows(w: segment_distributed.Walker) -> list[dict]:
+        if emit is not None:
+            return emit(w, True)
+        return [_assemble_rows(w.conv_id, w.bucket, w.finish(), w.meta, w.n)]
 
     def process(batches):
         worker.bootstrap()
         carry: pd.DataFrame | None = None
-        for pdf in batches:
+        walker: segment_distributed.Walker | None = None
+        # a trailing None marks the end of the stream: the carry is final
+        for pdf in itertools.chain(batches, [None]):
+            final = pdf is None
             if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
+                pdf = carry if final else pd.concat([carry, pdf], ignore_index=True)
                 carry = None
-            if not len(pdf):
+            n = 0 if pdf is None else len(pdf)
+            if not n and not final:
                 continue
-            cids = pdf["conv_id"].values
-            last = cids[-1]
-            # rows are sorted by conv_id: the trailing conv may continue in
-            # the next batch — hold it back
-            split = len(cids)
-            while split > 0 and cids[split - 1] == last:
-                split -= 1
-            carry = pdf.iloc[split:].reset_index(drop=True)
-            if split:
-                yield _emit_documents(pdf.iloc[:split])
-        if carry is not None and len(carry):
-            yield _emit_documents(carry)
+            if n:
+                cids = pdf["conv_id"].values
+                cols = tuple(
+                    pdf[c].values
+                    for c in ("turn_idx", "tag", "page_text", "meta_json", "bucket")
+                )
+            out: list[dict] = []
+            if walker is not None and (not n or cids[0] != walker.conv_id):
+                out += walked_rows(walker)
+                walker = None
+            lo = 0
+            while lo < n:
+                cid = cids[lo]
+                hi = lo + 1
+                while hi < n and cids[hi] == cid:
+                    hi += 1
+                # rows are sorted by conv_id: the trailing conversation may
+                # continue in the next batch
+                open_end = hi == n and not final
+                if cid in routed:
+                    if walker is None:
+                        walker = segment_distributed.Walker(
+                            cid, routed[cid], keep_pages=emit is None
+                        )
+                        walker.bucket = first_bucket(cols[-1], lo)
+                    cut = hi - 1 if open_end and cols[1][hi - 1] == 0 else hi
+                    turns, pages, metas, walker.bucket = _merge_turns(
+                        cols, lo, cut, walker.bucket
+                    )
+                    for t, p, m in zip(turns, pages, metas):
+                        walker.feed(t, p, m)
+                    if not open_end:
+                        out += walked_rows(walker)
+                        walker = None
+                    elif cut < hi:
+                        carry = pdf.iloc[cut:]
+                elif open_end:
+                    carry = pdf.iloc[lo:]
+                else:
+                    _, pages, metas, bucket = _merge_turns(
+                        cols, lo, hi, first_bucket(cols[-1], lo)
+                    )
+                    meta = next((m for m in metas if m), None)
+                    out.append(
+                        _assemble_rows(
+                            cid, bucket, segmentation.segment_document(pages),
+                            meta, len(pages),
+                        )
+                    )
+                lo = hi
+            if walker is not None and emit is not None:
+                out += emit(walker, False)
+            if out:
+                yield pd.DataFrame(out)
 
     return (
         tagged.repartition("bucket")
         .sortWithinPartitions("conv_id", "turn_idx", "tag")
-        .mapInPandas(process, schema=schemas.DOCS_OUT)
+        .mapInPandas(process, schema=schema)
     )
 
 
 def assemble_documents(turns_out: DataFrame) -> DataFrame:
     """Per-turn records that carry their own page text
     (``store_page_text="always"``) → one document row per conversation."""
-    return _assemble_sorted(_verdict_rows(turns_out))
+    return assemble_sorted(tagged_turns(turns_out))
 
 
 def assemble_documents_from_input(
@@ -224,22 +303,7 @@ def assemble_documents_from_input(
 
     ``transcripts_df`` must carry the ``bucket`` column (``add_bucket``).
     """
-    if "bucket" not in transcripts_df.columns:
-        raise ValueError(
-            "assemble_documents_from_input requires a 'bucket' column on "
-            "transcripts_df — apply pipeline.add_bucket(df, num_buckets) "
-            "first (this is a breaking change from the pre-r5 raw-transcripts "
-            "signature)"
-        )
-    inputs = transcripts_df.select(
-        "conv_id",
-        F.col("turn_idx").cast("int").alias("turn_idx"),
-        F.lit(0).alias("tag"),
-        F.col("text").alias("page_text"),
-        F.lit(None).cast("string").alias("meta_json"),
-        F.col("bucket").cast("int").alias("bucket"),
-    )
-    return _assemble_sorted(inputs.unionByName(_verdict_rows(verdicts_df)))
+    return assemble_sorted(tagged_turns(verdicts_df, transcripts_df))
 
 
 def explode_spans(docs_out: DataFrame) -> DataFrame:
@@ -290,47 +354,13 @@ def reassemble_text(turns_out: DataFrame) -> DataFrame:
     texts joined with a single space in turn order, deterministic via
     ``array_sort(collect_list(struct(...)))``.
 
-    Reference: check_transcription.py:104-118.  For mega-conversations whose
-    single aggregation state would outgrow an executor, use the two-level
-    (salted partial concat → final concat) variant ``reassemble_text_salted``.
+    Reference: check_transcription.py:104-118.
     """
     return turns_out.groupBy("conv_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("turn_idx", "page_text"))),
                 lambda s: s["page_text"],
-            ),
-            " ",
-        ).alias("doc_text")
-    )
-
-
-def reassemble_text_salted(turns_out: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Two-level skew-safe reassembly: partial in-order concat per
-    ``(conv_id, turn_idx // range)`` salt bucket, then final concat of the
-    (far fewer, pre-aggregated) partials per conversation.  Keeps any single
-    aggregation state bounded for 10^5+-turn conversations (north-rule skew
-    handling).
-    """
-    range_size = 1024
-    partial = (
-        turns_out.withColumn("salt", (F.col("turn_idx") / F.lit(range_size)).cast("int"))
-        .groupBy("conv_id", "salt")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("turn_idx", "page_text"))),
-                    lambda s: s["page_text"],
-                ),
-                " ",
-            ).alias("partial_text")
-        )
-    )
-    return partial.groupBy("conv_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("salt", "partial_text"))),
-                lambda s: s["partial_text"],
             ),
             " ",
         ).alias("doc_text")

@@ -1,58 +1,59 @@
-"""Distributed (mega-conversation-safe) segmentation.
+"""Mega-conversation segmentation: boundary election plus a page-at-a-time
+walker that runs inside the one sorted-stream assembler.
 
-``assemble_documents`` holds one whole conversation per task — the same
-contract as the reference, fine for ordinary documents.  At 10^12-turn scale
-a pathological conversation (10^5+ turns) outgrows an executor; THIS module
-is the scale path: no task ever holds more than (a) one page, (b) one
-section's pages, or (c) one reference ENTRY's pages (r4: the references
-tail is no longer concatenated anywhere — see ``references_entries``).
+``documents.assemble_sorted`` holds a whole conversation per assembly step,
+the same contract as the reference.  A pathological conversation (10^5+
+turns) outgrows a Python worker that way, so conversations routed here are
+streamed instead: the assembler feeds each merged page to a ``Walker`` and
+never concatenates the conversation.
 
-Pipeline (all frames carry small records unless noted):
+Only the planning work is split out of the hot key (Scarlett, EuroSys'11):
 
-  A. per-page hits (narrow mapInPandas): abstract-keyname hits, references
-     title-line hits, unclamped ``\\n## …\\n\\n`` heading spans
-  B. boundary election (tiny shuffle): abstract = min (variation rank,
-     page); references = min (variation rank, -page) — reverse page scan
-  C. boundary finishing (join of ≤2 pages/conv): body-start, paragraph-end,
-     first-enumeration offsets; clamped re-scan of the two boundary pages
-  D. heading keys: row_number per conv + the oracle's per-page trailing
-     "references" pop (popped keys leave gaps — later sections keep their
-     larger keys, which feeds roman numbering; reproduced exactly)
-  E. section text (bounded shuffle): pages range-joined to their owning
-     span, edge-sliced, ordered concat — a task holds ONE section's pages
-  F. references entries (entry-bounded): per-piece marker/terminator scan →
-     findall replay on planning ints → per-entry range-join reassembly
+  A. per-page hits (narrow mapInPandas): the page's best abstract keyname
+     hit and best references title-line hit;
+  B. boundary election (one small aggregation, collected to the driver):
+     abstract = min (variation rank, page); references = min (variation
+     rank, -page), the oracle's reverse page scan.
 
-Exactness: ``re.finditer`` over a clamped slice equals the full-page scan
-filtered to the window whenever the clamps are 0/len(page) — true for all
-interior pages; the two boundary pages are re-scanned with real clamps in
-phase C.  Equality with the whole-conversation path is asserted over the
-fixture corpus in tests/test_distributed_segmentation.py.
+The walker then reproduces ``oracle.segmentation.segment_document`` one
+page at a time from those elected hits, reusing the oracle's helpers on
+each page.  It holds the open section's pages, at most one pending
+reference entry and the finished records.  Equality with the
+whole-conversation path is asserted over the fixture corpus, fuzzed pages
+and a 120k-turn conversation (tests/test_distributed_segmentation.py,
+tests/test_mega_conversation.py).
 """
 
 from __future__ import annotations
 
 import re
-import threading
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from ..oracle import segmentation, textnorm
+from ..oracle import segmentation
 
 _HITS_SCHEMA = (
-    "conv_id string, turn_idx int, kind string, rank int, pos int, title string"
+    "conv_id string, turn_idx int, abs_rank int, abs_pos int, abs_title string, "
+    "ref_rank int, ref_pos int, ref_title string"
 )
-
-_BOUNDARY_SCHEMA = (
-    "conv_id string, abs_turn int, abs_start int, abs_end int, abs_title string, "
-    "abs_text string, ref_turn int, ref_start int, ref_heading_pos int, ref_title string"
-)
+_HITS_COLUMNS = [c.split()[0] for c in _HITS_SCHEMA.split(", ")]
 
 
-def page_hits(turns_pruned: DataFrame) -> DataFrame:
-    """Phase A: tiny hit records out of a full-page narrow scan."""
+def _first_hit(names: list[str], find) -> tuple:
+    """``(rank, pos, name)`` of the first name ``find`` locates, else Nones."""
+    for rank, name in enumerate(names):
+        pos = find(name)
+        if pos is not None and pos >= 0:
+            return rank, pos, name
+    return None, None, None
+
+
+def page_hits(pages: DataFrame) -> DataFrame:
+    """Phase A: one tiny hit record per page out of a narrow page scan, with
+    the oracle's per-page substring prefilters (``find_abstract_start``,
+    ``find_references_start``)."""
     abstract_names = segmentation.keyname_variations(
         "Abstract"
     ) + segmentation.keyname_variations("abstract")
@@ -60,761 +61,309 @@ def page_hits(turns_pruned: DataFrame) -> DataFrame:
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: list[tuple] = []
+            rows = []
             for conv_id, turn_idx, text in zip(
                 pdf["conv_id"], pdf["turn_idx"], pdf["page_text"]
             ):
                 text = text or ""
-                for rank, name in enumerate(abstract_names):
-                    p = text.find(name)
-                    if p >= 0:
-                        rows.append((conv_id, turn_idx, "abstract", rank, p, name))
-                for rank, name in enumerate(ref_names):
-                    p = segmentation.title_line_match(text, name)
-                    if p is not None:
-                        rows.append((conv_id, turn_idx, "refs", rank, p, name))
-                for m in segmentation._SECTION_RE.finditer(text):
-                    rows.append(
-                        (conv_id, turn_idx, "head", 0, m.start(), m.group(1).strip())
+                low = text.lower()
+                rows.append(
+                    (
+                        conv_id,
+                        turn_idx,
+                        *_first_hit(abstract_names, text.find),
+                        *_first_hit(
+                            ref_names,
+                            lambda name: segmentation.title_line_match(text, name)
+                            if name.lower() in low
+                            else None,
+                        ),
                     )
-            yield pd.DataFrame(
-                rows, columns=["conv_id", "turn_idx", "kind", "rank", "pos", "title"]
-            )
-
-    return turns_pruned.mapInPandas(scan, schema=_HITS_SCHEMA)
-
-
-def elect_boundaries(hits: DataFrame, turns_pruned: DataFrame) -> DataFrame:
-    """Phases B+C: one row per conv with abstract/references coordinates."""
-    abstract = (
-        hits.where(F.col("kind") == "abstract")
-        .groupBy("conv_id")
-        .agg(
-            F.min_by(
-                F.struct("turn_idx", "pos", "title", "kind"),
-                F.struct("rank", "turn_idx"),
-            ).alias("h")
-        )
-        .select("conv_id", "h.*")
-    )
-    refs = (
-        hits.where(F.col("kind") == "refs")
-        .groupBy("conv_id")
-        .agg(
-            F.min_by(
-                F.struct("turn_idx", "pos", "title", "kind"),
-                F.struct("rank", (-F.col("turn_idx")).alias("neg")),
-            ).alias("h")
-        )
-        .select("conv_id", "h.*")
-    )
-    elected = abstract.unionByName(refs)
-    with_pages = elected.join(turns_pruned, on=["conv_id", "turn_idx"], how="left")
-
-    def finish(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for conv_id, grp in pdf.groupby("conv_id", sort=False):
-            vals = {
-                "abs_turn": None, "abs_start": None, "abs_end": None,
-                "abs_title": None, "abs_text": None,
-                "ref_turn": None, "ref_start": None, "ref_heading_pos": None,
-                "ref_title": None,
-            }
-            for _, r in grp.iterrows():
-                page = r["page_text"] or ""
-                if r["kind"] == "abstract":
-                    body = segmentation.next_alphanumeric_start(
-                        page, r["title"], int(r["pos"])
-                    )
-                    end = segmentation.paragraph_end(page, body)
-                    vals.update(
-                        abs_turn=int(r["turn_idx"]), abs_start=body, abs_end=end,
-                        abs_title=r["title"], abs_text=page[body:end],
-                    )
-                else:
-                    vals.update(
-                        ref_turn=int(r["turn_idx"]),
-                        ref_start=segmentation.first_reference_start(page, int(r["pos"])),
-                        ref_heading_pos=int(r["pos"]),
-                        ref_title=r["title"],
-                    )
-            out.append((conv_id, *vals.values()))
-        return pd.DataFrame(
-            out,
-            columns=[
-                "conv_id", "abs_turn", "abs_start", "abs_end", "abs_title",
-                "abs_text", "ref_turn", "ref_start", "ref_heading_pos", "ref_title",
-            ],
-        )
-
-    return with_pages.groupBy("conv_id").applyInPandas(finish, schema=_BOUNDARY_SCHEMA)
-
-
-def section_heads(
-    hits: DataFrame, boundaries: DataFrame, turns_pruned: DataFrame
-) -> DataFrame:
-    """Phases C (head rescan) + D (keys): clamped, keyed section headings."""
-    h = hits.where(F.col("kind") == "head").join(boundaries, on="conv_id", how="left")
-
-    start_turn = F.coalesce(F.col("abs_turn"), F.lit(0))
-    start_pos = F.coalesce(F.col("abs_end"), F.lit(0))
-    in_range = (
-        (F.col("turn_idx") > start_turn)
-        | ((F.col("turn_idx") == start_turn) & (F.col("pos") >= start_pos))
-    ) & (
-        F.col("ref_turn").isNull()
-        | (F.col("turn_idx") < F.col("ref_turn"))
-        | (
-            (F.col("turn_idx") == F.col("ref_turn"))
-            & (F.col("pos") < F.col("ref_start"))
-        )
-    )
-    # oracle early-return: a document with NEITHER boundary skips the heading
-    # scan entirely and becomes one "Full Text" section (:112-114)
-    clamped = h.where(
-        in_range & ~(F.col("abs_turn").isNull() & F.col("ref_turn").isNull())
-    )
-
-    boundary_pages = (
-        boundaries.select(
-            "conv_id",
-            F.col("abs_turn").alias("turn_idx"),
-            F.col("abs_end").alias("lo"),
-            F.lit(None).cast("int").alias("hi"),
-        )
-        .where(F.col("turn_idx").isNotNull())
-        .unionByName(
-            boundaries.select(
-                "conv_id",
-                F.col("ref_turn").alias("turn_idx"),
-                F.lit(None).cast("int").alias("lo"),
-                F.col("ref_start").alias("hi"),
-            ).where(F.col("turn_idx").isNotNull())
-        )
-        .groupBy("conv_id", "turn_idx")
-        .agg(F.max("lo").alias("lo"), F.min("hi").alias("hi"))
-    )
-
-    def rescan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, page, lo, hi in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["page_text"], pdf["lo"], pdf["hi"]
-            ):
-                page = page or ""
-                lo_i = int(lo) if pd.notna(lo) else 0
-                hi_i = int(hi) if pd.notna(hi) else len(page)
-                for m in segmentation._SECTION_RE.finditer(page[lo_i:hi_i]):
-                    rows.append(
-                        (conv_id, int(turn_idx), m.start() + lo_i, m.group(1).strip())
-                    )
-            yield pd.DataFrame(rows, columns=["conv_id", "turn_idx", "pos", "title"])
-
-    rescanned = boundary_pages.join(turns_pruned, on=["conv_id", "turn_idx"]).mapInPandas(
-        rescan, schema="conv_id string, turn_idx int, pos int, title string"
-    )
-
-    interior = clamped.join(
-        boundary_pages.select("conv_id", "turn_idx"),
-        on=["conv_id", "turn_idx"],
-        how="left_anti",
-    ).select("conv_id", "turn_idx", "pos", "title")
-
-    heads = interior.unionByName(rescanned)
-
-    # oracle key semantics: discovery-order counter, then the per-page
-    # trailing "references" heading is POPPED leaving a key gap (later
-    # sections keep their larger keys — feeds roman numbering)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx", "pos")
-    keyed = heads.withColumn("section_key", F.row_number().over(w))
-    page_w = Window.partitionBy("conv_id", "turn_idx")
-    keyed = keyed.withColumn("page_max_pos", F.max("pos").over(page_w))
-    return keyed.where(
-        ~((F.col("pos") == F.col("page_max_pos")) & (F.lower("title") == "references"))
-    ).drop("page_max_pos")
-
-
-def section_texts(
-    heads: DataFrame, boundaries: DataFrame, turns_out: DataFrame
-) -> DataFrame:
-    """Phase E: span closure (lead) + bounded range-join slice-and-concat +
-    title/number finishing.  Output: one row per section."""
-    pruned = turns_out.select("conv_id", "turn_idx", "page_text")
-    last_page = (
-        pruned.groupBy("conv_id")
-        .agg(F.max_by(F.struct("turn_idx", F.length("page_text").alias("plen")),
-                      "turn_idx").alias("lp"))
-        .select("conv_id", F.col("lp.turn_idx").alias("last_turn"),
-                F.col("lp.plen").alias("last_len"))
-    )
-
-    w = Window.partitionBy("conv_id").orderBy("turn_idx", "pos")
-    spans = (
-        heads.withColumn("next_turn", F.lead("turn_idx").over(w))
-        .withColumn("next_pos", F.lead("pos").over(w))
-        .join(boundaries.select("conv_id", "ref_turn", "ref_heading_pos"),
-              on="conv_id", how="left")
-        .join(last_page, on="conv_id", how="left")
-        .select(
-            "conv_id",
-            "section_key",
-            F.col("turn_idx").alias("start_turn"),
-            F.col("pos").alias("start_pos"),
-            F.coalesce("next_turn", "ref_turn", "last_turn").alias("end_turn"),
-            F.coalesce("next_pos", "ref_heading_pos", "last_len").alias("end_pos"),
-            "title",
-        )
-    )
-
-    # Binned range join.  A bare conv_id equi-join materialises
-    # sections × pages rows per conversation before the range filter —
-    # quadratic exactly in the mega-conv regime this module exists for
-    # (measured: 3 convs / 21.5k turns / ~7k sections each took 54s; a
-    # 32k-page conv would build ~10^9 rows).  Binning turns it linear:
-    # pages carry their turn-chunk, spans explode to the chunks they
-    # cover (contiguous non-overlapping spans ⇒ ~1 extra span per chunk),
-    # the join keys on (conv_id, chunk), and the original range filter
-    # still runs — the output row set is provably identical (every
-    # in-range pair shares a chunk; a page has exactly one chunk, so no
-    # duplicates).
-    chunk = 1024
-    span_chunks = spans.withColumn(
-        "chunk",
-        F.explode(
-            F.sequence(
-                (F.col("start_turn") / chunk).cast("int"),
-                (F.col("end_turn") / chunk).cast("int"),
-            )
-        ),
-    )
-    pages_chunked = pruned.withColumn("chunk", (F.col("turn_idx") / chunk).cast("int"))
-    joined = (
-        span_chunks.join(pages_chunked, on=["conv_id", "chunk"])
-        .where(
-            (F.col("turn_idx") >= F.col("start_turn"))
-            & (F.col("turn_idx") <= F.col("end_turn"))
-        )
-        .drop("chunk")
-    )
-    piece = (
-        F.when(
-            (F.col("turn_idx") == F.col("start_turn"))
-            & (F.col("turn_idx") == F.col("end_turn")),
-            F.col("page_text").substr(
-                F.col("start_pos") + 1, F.col("end_pos") - F.col("start_pos")
-            ),
-        )
-        .when(
-            F.col("turn_idx") == F.col("start_turn"),
-            F.col("page_text").substr(F.col("start_pos") + 1, F.length("page_text")),
-        )
-        .when(
-            F.col("turn_idx") == F.col("end_turn"),
-            F.col("page_text").substr(F.lit(1), F.col("end_pos")),
-        )
-        .otherwise(F.col("page_text"))
-    )
-    grouped = (
-        joined.select(
-            "conv_id", "section_key", "start_turn", "start_pos", "end_turn",
-            "end_pos", "title", "turn_idx", piece.alias("piece"),
-        )
-        .groupBy(
-            "conv_id", "section_key", "start_turn", "start_pos", "end_turn",
-            "end_pos", "title",
-        )
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("turn_idx", "piece"))),
-                    lambda s: s["piece"],
-                ),
-                " ",
-            ).alias("raw_text")
-        )
-    )
-
-    def finish(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            texts, numbers, titles = [], [], []
-            for raw, title, key, ordinal in zip(
-                pdf["raw_text"], pdf["title"], pdf["section_key"], pdf["ordinal"]
-            ):
-                body = raw.split("\n\n", 1)
-                texts.append(body[1] if len(body) > 1 else "")
-                numeral = segmentation.detect_numeral(title)
-                number = segmentation.render_section_number(
-                    numeral, int(key), int(ordinal)
                 )
-                numbers.append(number)
-                titles.append(segmentation.clean_section_title(title, number))
-            out = pdf[
-                ["conv_id", "section_key", "start_turn", "start_pos",
-                 "end_turn", "end_pos"]
-            ].copy()
-            out["title"] = titles
-            out["number"] = numbers
-            out["text"] = texts
-            yield out
+            yield pd.DataFrame(rows, columns=_HITS_COLUMNS)
 
-    w0 = Window.partitionBy("conv_id").orderBy("section_key")
-    with_ord = grouped.withColumn("ordinal", F.row_number().over(w0) - 1)
-    return with_ord.mapInPandas(
-        finish,
-        schema=(
-            "conv_id string, section_key int, start_turn int, start_pos int, "
-            "end_turn int, end_pos int, title string, number string, text string"
-        ),
+    return pages.mapInPandas(scan, schema=_HITS_SCHEMA)
+
+
+def elect_boundaries(tagged: DataFrame) -> dict[str, tuple]:
+    """Phase B for every conversation of a tagged assembly frame
+    (``documents.tagged_turns``): ``conv_id → (abstract, references)``,
+    each the elected ``(turn_idx, pos, title)`` hit or None.  Collected to
+    the driver: a handful of values per conversation."""
+    # a turn's page is its verdict row's text, else its input row's text
+    # (the assembler's merge rule)
+    pages = tagged.groupBy("conv_id", "turn_idx").agg(
+        F.coalesce(F.max_by("page_text", "tag"), F.min_by("page_text", "tag")).alias(
+            "page_text"
+        )
     )
+
+    def best(kind: str, order) -> F.Column:
+        # null orderings (pages without a hit) never win a min_by
+        found = F.col(f"{kind}_rank").isNotNull()
+        hit = F.struct(
+            "turn_idx",
+            F.col(f"{kind}_pos").alias("pos"),
+            F.col(f"{kind}_title").alias("title"),
+        )
+        return F.min_by(F.when(found, hit), F.when(found, F.struct(f"{kind}_rank", order)))
+
+    elected = page_hits(pages).groupBy("conv_id").agg(
+        best("abs", F.col("turn_idx")).alias("abstract"),
+        best("ref", -F.col("turn_idx")).alias("references"),
+    )
+    return {
+        r["conv_id"]: tuple(
+            None if h is None else (h["turn_idx"], h["pos"], h["title"])
+            for h in (r["abstract"], r["references"])
+        )
+        for r in elected.collect()
+    }
 
 
 _REF_MARKER_RE = re.compile(r"\[(\d+)\]")
-# zero-width: finditer enumerates EVERY position where a terminator starts,
-# including overlapping ones ("\n\n\n" terminates at 0 and 1) — exactly the
-# positions the oracle's lazy-body lookahead (?=\n\n|\n\*) can stop at
-_REF_TERM_RE = re.compile(r"(?=\n\n|\n\*)")
 
 
-def references_entries(boundaries: DataFrame, turns_out: DataFrame) -> DataFrame:
-    """Phase F, entry-bounded: reference entries parsed WITHOUT ever
-    materialising the concatenated references tail.
+class ReferenceEntries:
+    """``segmentation.parse_reference_entries(" ".join(pieces))`` fed one
+    piece at a time.
 
-    The oracle (``oracle/segmentation.py parse_reference_entries``; reference
-    ``elaborate_single_mmd_scientific.py:396-407``) runs
-    ``\\[(\\d+)\\](.*?)(?=\\n\\n|\\n\\*)`` (DOTALL, findall, dict ⇒ last
-    duplicate number wins) over ``" ".join(tail_pieces)``.  The r3 shape
-    reproduced that literally — one ``collect_list`` concat of the whole
-    tail per conversation — which is O(tail) in a single task, and for a
-    references-heavy mega-conversation the tail IS the conversation.
+    The pieces are joined with one space, and neither a ``[n]`` marker (no
+    whitespace) nor a ``\\n\\n``/``\\n*`` terminator (first char ``\\n``)
+    can span that seam.  So a match can only be left open by a marker with
+    no terminator after it yet, and only the text from that marker on is
+    kept.  ``entries`` keeps the oracle dict's semantics: the last
+    duplicate number wins, in first-insertion order."""
 
-    Key exactness fact making a bounded rewrite possible: pieces are joined
-    with a single space, and neither a ``[n]`` marker (no whitespace chars)
-    nor a terminator (``\\n\\n``/``\\n*``, first char ``\\n``) can span the
-    ``" "`` seam — so both can be located per PIECE in a narrow scan and
-    lifted to global tail coordinates via a prefix-sum of piece lengths.
-    The findall replay then runs over position-only planning rows (marker
-    start/end/number + next terminator at-or-after it, computed with a
-    reverse running-min window; terminators cannot fall inside a marker, so
-    at-or-after marker START equals at-or-after marker END), and each
-    matched entry's text is reassembled with the same exactly-once
-    chunk-binned range join the section path uses.  No task holds more than
-    one page (scan), one conversation's planning ints (replay), or one
-    ENTRY's pieces (assembly) — evidenced under a hard Python-worker memory
-    cap in tests/test_mega_conversation.py.
-    """
-    pruned = turns_out.select("conv_id", "turn_idx", "page_text")
-    bounds = boundaries.where(F.col("ref_turn").isNotNull())
-    tail = bounds.select("conv_id", "ref_turn", "ref_start").join(
-        pruned, on="conv_id"
-    ).where(F.col("turn_idx") >= F.col("ref_turn"))
-    sliced = tail.select(
-        "conv_id",
-        "turn_idx",
-        F.when(
-            F.col("turn_idx") == F.col("ref_turn"),
-            F.col("page_text").substr(F.col("ref_start") + 1, F.length("page_text")),
-        )
-        .otherwise(F.col("page_text"))
-        .alias("piece"),
-    )
+    def __init__(self) -> None:
+        self.entries: dict[int, str] = {}
+        self._pending: list[str] = []
 
-    # global offset of each piece inside " ".join(pieces): prefix sum of
-    # (len + 1 separator) over preceding pieces
-    woff = Window.partitionBy("conv_id").orderBy("turn_idx").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    pieces = sliced.withColumn("plen", F.length("piece").cast("long")).withColumn(
-        "off",
-        F.coalesce(F.sum(F.col("plen") + 1).over(woff), F.lit(0)).cast("long"),
-    )
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["conv_id", "kind", "num", "start", "end"]
-        for pdf in batches:
-            rows: list[tuple] = []
-            for conv_id, off, piece in zip(pdf["conv_id"], pdf["off"], pdf["piece"]):
-                base = int(off)
-                text = piece or ""
-                for m in _REF_MARKER_RE.finditer(text):
-                    rows.append(
-                        (conv_id, 0, int(m.group(1)), base + m.start(), base + m.end())
-                    )
-                for m in _REF_TERM_RE.finditer(text):
-                    rows.append((conv_id, 1, None, base + m.start(), None))
-            yield pd.DataFrame(rows, columns=cols)
-
-    events = pieces.select("conv_id", "off", "piece").mapInPandas(
-        scan, schema="conv_id string, kind int, num long, start long, end long"
-    )
-
-    # first terminator at-or-after each marker (no terminator starts inside
-    # a marker, so >= start is exactly >= end): running min over the event
-    # stream in DESCENDING position order.  The frame must GROW
-    # (unboundedPreceding..current) — Spark evaluates growing frames
-    # incrementally in O(n), while the equivalent ascending-order
-    # currentRow..unboundedFollowing frame is a shrinking frame that Spark
-    # recomputes from scratch per row, O(n^2) — measured: a 400k-event
-    # conversation never finished.
-    wnext = Window.partitionBy("conv_id").orderBy(F.desc("start")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    markers = (
-        events.withColumn(
-            "next_t",
-            F.min(F.when(F.col("kind") == 1, F.col("start"))).over(wnext),
-        )
-        .where(F.col("kind") == 0)
-        .select("conv_id", "num", "start", "end", "next_t")
-    )
-
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Sequential findall over planning ints: lazy body ends at the first
-        terminator ≥ marker end; scanning resumes AT the terminator (the
-        lookahead is zero-width), so markers inside a matched body are
-        skipped; a marker with no terminator after it ends the scan (later
-        markers cannot have one either); dict ⇒ last duplicate number wins.
-        """
-        if not len(pdf):
-            return pd.DataFrame(columns=["conv_id", "num", "s", "e", "rank"])
-        conv_id = pdf["conv_id"].iloc[0]
-        best: dict[int, tuple[int, int]] = {}
-        ranks: dict[int, int] = {}
+    def feed(self, piece: str) -> None:
+        if self._pending:
+            if "\n\n" not in piece and "\n*" not in piece:
+                self._pending.append(piece)
+                return
+            text = " ".join(self._pending + [piece])
+            self._pending = []
+        else:
+            text = piece
         pos = 0
-        for start, end, num, next_t in sorted(
-            zip(pdf["start"], pdf["end"], pdf["num"], pdf["next_t"])
-        ):
-            if start < pos:
-                continue
-            if pd.isna(next_t):
-                break
-            n = int(num)
-            # Python-dict semantics downstream: a re-inserted number keeps its
-            # ORIGINAL position (first-insertion rank) but takes the new body
-            if n not in ranks:
-                ranks[n] = len(ranks)
-            best[n] = (int(end), int(next_t))
-            pos = int(next_t)
-        return pd.DataFrame(
-            [(conv_id, n, s, e, ranks[n]) for n, (s, e) in best.items()],
-            columns=["conv_id", "num", "s", "e", "rank"],
-        )
+        while (m := segmentation._REF_ENTRY_RE.search(text, pos)) is not None:
+            self.entries[int(m.group(1))] = m.group(2).strip()
+            pos = m.end()
+        marker = _REF_MARKER_RE.search(text, pos)
+        if marker is not None:
+            self._pending = [text[marker.start():]]
 
-    spans = markers.groupBy("conv_id").applyInPandas(
-        replay, schema="conv_id string, num long, s long, e long, rank long"
-    )
 
-    # exactly-once chunk-binned range join (see section_texts): a
-    # (piece, span) pair joins only in the chunk containing
-    # max(piece_off, span_start)
-    chunk = 1 << 16
-    span_chunks = spans.withColumn(
-        "chunk",
-        F.explode(
-            F.sequence(
-                (F.col("s") / chunk).cast("long"), (F.col("e") / chunk).cast("long")
+class Walker:
+    """``segmentation.segment_document`` over one conversation fed a page at
+    a time, given its elected ``(abstract, references)`` hits.
+
+    Page coordinates are page ordinals, as in the oracle; the hits are
+    matched on ``turn_idx``.  ``keep_pages`` holds every page while no
+    section heading has survived, for the oracle's single "Full Text"
+    section; without it such a document ends with no sections."""
+
+    def __init__(self, conv_id: str, hits: tuple, keep_pages: bool = True) -> None:
+        self.conv_id = conv_id
+        self.abs_hit, self.ref_hit = hits
+        self.n = 0
+        self.meta = None
+        self.bucket = 0
+        self.abstract: dict | None = None
+        self.references: dict | None = None
+        self.refs = ReferenceEntries()
+        # the heading scan runs from the abstract's end (page 0 without an
+        # abstract) to the references start; with neither boundary the
+        # document is one "Full Text" section
+        self.scanning = self.abs_hit is None and self.ref_hit is not None
+        self.key = 1  # the oracle's heading counter
+        self.ordinal = 0  # surviving headings so far
+        self.open: tuple | None = None  # (key, page, pos, title, number, span)
+        self.sections: dict[int, dict] = {}
+        self.pages: list[str] | None = [] if keep_pages else None
+
+    def feed(self, turn_idx: int, page: str, meta) -> None:
+        i = self.n
+        self.n += 1
+        if self.meta is None and meta:
+            self.meta = meta
+        if self.pages is not None:
+            self.pages.append(page)
+        lo, hi = 0, len(page)
+        if self.abs_hit is not None and turn_idx == self.abs_hit[0]:
+            _, pos, title = self.abs_hit
+            body = segmentation.next_alphanumeric_start(page, title, pos)
+            end = segmentation.paragraph_end(page, body)
+            self.abstract = {
+                "start_page": i, "start_pos": body, "end_page": i,
+                "end_pos": end, "title": title, "text": page[body:end],
+            }
+            self.scanning = self.references is None
+            lo = end
+        if self.ref_hit is not None and turn_idx == self.ref_hit[0]:
+            _, pos, title = self.ref_hit
+            hi = segmentation.first_reference_start(page, pos)
+            self.references = {
+                "start_page": i, "start_pos": hi, "heading_pos": pos,
+                "title": title, "entries": self.refs.entries,
+            }
+            self.refs.feed(page[hi:])
+            if self.scanning:
+                self._scan(i, page, lo, hi)
+                self._close(i, pos)
+                self.scanning = False
+        elif self.references is not None:
+            self.refs.feed(page)
+        elif self.scanning:
+            self._scan(i, page, lo, hi)
+
+    def _scan(self, i: int, page: str, lo: int, hi: int) -> None:
+        """``find_section_positions`` for one page, closing the sections
+        its surviving headings end."""
+        if self.open is not None:
+            self.open[-1].append(page)
+        heads = [
+            (m.start() + lo, m.group(1).strip())
+            for m in segmentation._SECTION_RE.finditer(page[lo:hi])
+        ]
+        first_key = self.key
+        self.key += len(heads)
+        # the page's trailing "references" heading is dropped; its key stays
+        # used (later sections keep their larger keys)
+        if heads and heads[-1][1].lower() == "references":
+            heads.pop()
+        for key, (pos, title) in enumerate(heads, start=first_key):
+            self._close(i, pos)
+            number = segmentation.render_section_number(
+                segmentation.detect_numeral(title), key, self.ordinal
             )
-        ),
-    )
-    piece_chunks = pieces.select("conv_id", "turn_idx", "piece", "plen", "off").withColumn(
-        "chunk",
-        F.explode(
-            F.sequence(
-                (F.col("off") / chunk).cast("long"),
-                ((F.col("off") + F.col("plen")) / chunk).cast("long"),
-            )
-        ),
-    )
-    joined = (
-        span_chunks.join(piece_chunks, on=["conv_id", "chunk"])
-        # closed-interval touch: a boundary-adjacent piece contributes an
-        # empty string whose array_join separator reproduces the " " seam
-        # char the span covers
-        .where(
-            (F.col("off") <= F.col("e"))
-            & (F.col("off") + F.col("plen") >= F.col("s"))
-            & (
-                F.col("chunk")
-                == (F.greatest(F.col("off"), F.col("s")) / chunk).cast("long")
-            )
-        )
-    )
-    cs = F.greatest(F.col("s") - F.col("off"), F.lit(0))
-    ce = F.least(F.col("e") - F.col("off"), F.col("plen"))
-    grouped = (
-        joined.select(
-            "conv_id",
-            "num",
-            "rank",
-            "turn_idx",
-            F.col("piece").substr((cs + 1).cast("int"), (ce - cs).cast("int")).alias(
-                "contrib"
-            ),
-        )
-        .groupBy("conv_id", "num", "rank")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("turn_idx", "contrib"))),
-                    lambda x: x["contrib"],
-                ),
-                " ",
-            ).alias("body")
-        )
-    )
+            self.ordinal += 1
+            title = segmentation.clean_section_title(title, number)
+            self.open = (key, i, pos, title, number, [page])
+            self.pages = None
 
-    def strip_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Python str.strip() (unicode whitespace), matching the oracle's
-        # body.strip() — Spark trim()/Java \s are ASCII-only
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"],
-                    "ref_number": pdf["num"].astype("int64"),
-                    # scan-order rank: the oracle's entries dict preserves
-                    # FIRST-insertion order, and transcription/edoc rendering
-                    # iterate it — numeric order is NOT equivalent when
-                    # entries appear out of order in the text
-                    "ref_rank": pdf["rank"].astype("int64"),
-                    "raw": pdf["body"].map(lambda b: (b or "").strip()),
-                }
-            )
+    def _close(self, end_page: int, end_pos: int) -> None:
+        if self.open is None:
+            return
+        key, page, pos, title, number, span = self.open
+        self.sections[key] = {
+            "start_page": page, "start_pos": pos, "end_page": end_page,
+            "end_pos": end_pos, "text": segmentation.section_text(span, pos, end_pos),
+            "title": title, "number": number,
+        }
+        self.open = None
 
-    return grouped.mapInPandas(
-        strip_rows, schema="conv_id string, ref_number int, ref_rank int, raw string"
-    )
+    def finish(self) -> dict:
+        """The ``segment_document`` result; call once, after the last page."""
+        if self.open is not None:
+            self._close(self.n - 1, len(self.open[-1][-1]))
+        sections = self.sections
+        if self.pages is not None:
+            sections = segmentation.full_text_fallback(self.pages)
+        return {
+            "abstract": self.abstract,
+            "references": self.references,
+            "sections": sections,
+        }
 
 
-def assemble_documents_distributed(turns_out: DataFrame) -> DataFrame:
-    """DOCS_OUT-shaped document rows built entirely from the distributed
-    parts — the scale twin of ``documents.assemble_documents``.
-
-    Every per-conv aggregation here collects SMALL records (section rows,
-    reference entries, boundary coordinates), never page payloads.  The only
-    exception is the oracle's degenerate fallback (documents with no section
-    headings → one "Full Text" section holding the whole reassembled text),
-    which by definition needs the full document text; those convs — and only
-    those — go through the salted two-level reassembly.
-    """
-    import json as _json
-
-    from . import documents as docops, fastjson
-    from .. import schemas
-
-    parts = segment_documents_distributed(turns_out)
-    sections, boundaries, refs = parts["sections"], parts["boundaries"], parts["references"]
-
-    # ONE conv-level aggregation pass for every per-conv scalar (turn count,
-    # earliest non-null meta, bucket, first-page length) — three separate
-    # scans here each re-ran the whole turns subtree on the lazy path
-    conv_info = turns_out.groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("n_turns"),
-        F.min_by("meta_json", "turn_idx").alias("meta_json_any"),
-        F.min("bucket").alias("bucket"),
-        F.min_by(
-            "meta_json", F.when(F.col("meta_json").isNotNull(), F.col("turn_idx"))
-        ).alias("meta_json"),
-        F.max(
-            F.when(F.col("turn_idx") == 0, F.length("page_text"))
-        ).alias("first_len"),
-    )
-
-    sect_arr = sections.groupBy("conv_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "section_key", "start_turn", "start_pos", "end_turn",
-                    "end_pos", "title", "number", "text",
-                )
-            )
-        ).alias("sections")
-    )
-    # sort by SCAN rank, not number: the oracle's entries dict (and therefore
-    # transcription + edoc rendering) iterates in first-insertion order
-    ref_arr = refs.groupBy("conv_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct("ref_rank", "ref_number", "raw"))
-            ),
-            lambda x: F.struct(x["ref_number"].alias("ref_number"), x["raw"].alias("raw")),
-        ).alias("references")
-    )
-
-    base = (
-        conv_info.join(boundaries, on="conv_id", how="left")
-        .join(sect_arr, on="conv_id", how="left")
-        .join(ref_arr, on="conv_id", how="left")
-    )
-
-    # degenerate fallback: no section heads found -> whole-doc "Full Text";
-    # only these convs reassemble full pages (salted two-level concat)
-    fallback_ids = base.where(
-        F.col("sections").isNull() | (F.size("sections") == 0)
-    ).select("conv_id")
-    fallback_text = docops.reassemble_text_salted(
-        turns_out.join(fallback_ids, on="conv_id", how="left_semi")
-    )
-    base = base.join(fallback_text, on="conv_id", how="left")
-
-    def finish(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..oracle import assembly
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                meta = _json.loads(r.meta_json) if isinstance(r.meta_json, str) else None
-                title = (meta or {}).get("title")
-                authors = assembly._author_tuples(meta)
-                creation_date = (meta or {}).get("creation_date")
-
-                if r.sections is None or len(r.sections) == 0:
-                    sec_dict = {
-                        1: {
-                            "start_page": 0, "start_pos": 0, "end_page": 0,
-                            "end_pos": int(r.first_len or 0),
-                            "text": r.doc_text or "", "title": "Full Text",
-                            "number": "1",
-                        }
-                    }
-                else:
-                    sec_dict = {
-                        int(s["section_key"]): {
-                            "start_page": int(s["start_turn"]),
-                            "start_pos": int(s["start_pos"]),
-                            "end_page": int(s["end_turn"]),
-                            "end_pos": int(s["end_pos"]),
-                            "text": s["text"], "title": s["title"],
-                            "number": s["number"],
-                        }
-                        for s in r.sections
-                    }
-                abstract = None
-                if r.abs_turn is not None and not pd.isna(r.abs_turn):
-                    abstract = {
-                        "start_page": int(r.abs_turn), "start_pos": int(r.abs_start),
-                        "end_page": int(r.abs_turn), "end_pos": int(r.abs_end),
-                        "title": r.abs_title, "text": r.abs_text,
-                    }
-                references = None
-                if r.ref_turn is not None and not pd.isna(r.ref_turn):
-                    references = {
-                        "start_page": int(r.ref_turn), "start_pos": int(r.ref_start),
-                        "heading_pos": int(r.ref_heading_pos), "title": r.ref_title,
-                        "entries": {
-                            int(e["ref_number"]): e["raw"]
-                            for e in (
-                                r.references if r.references is not None else []
-                            )
-                        },
-                    }
-                transcription = assembly.generate_transcription(
-                    sec_dict, title, authors, abstract, references,
-                    include_references=True,
-                )
-                # byte-identical fast path for json.dumps(..., indent=4)
-                edoc_json = fastjson.dumps_indent4(
-                    assembly.edoc_dict(
-                        sec_dict, title, authors, creation_date, abstract,
-                        references, conv_id=r.conv_id,
-                        keywords=textnorm.split_keywords((meta or {}).get("keywords")),
-                    )
-                )
-                sections_out = [
-                    {
-                        "section_key": k,
-                        "start": {"turn_idx": s["start_page"], "pos": s["start_pos"]},
-                        "end": {"turn_idx": s["end_page"], "pos": s["end_pos"]},
-                        "title": s["title"], "number": s["number"], "text": s["text"],
-                    }
-                    for k, s in sec_dict.items()
-                ]
-                refs_out = (
-                    [
-                        {"ref_number": n, "raw": raw}
-                        for n, raw in sorted(references["entries"].items())
-                    ]
-                    if references
-                    else []
-                )
-                rows.append(
-                    {
-                        "conv_id": r.conv_id,
-                        "title": title,
-                        "transcription": transcription,
-                        "edoc_json": edoc_json,
-                        "abstract_text": abstract["text"] if abstract else None,
-                        "sections": sections_out,
-                        "references": refs_out,
-                        "n_sections": len(sections_out),
-                        "n_refs": len(refs_out),
-                        "n_turns": int(r.n_turns),
-                        "bucket": int(r.bucket),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return base.mapInPandas(finish, schema=schemas.DOCS_OUT)
+# Each emitter drains the walker's finished sections, so a walked
+# conversation never accumulates them.
 
 
-# Planning frames persisted by segment_documents_distributed, released by
-# release_planning_caches().  Spark's CacheManager holds cached plans until
-# an explicit unpersist or session end, so a long-lived session calling
-# run_pipeline repeatedly would otherwise accumulate cached partitions in
-# executor memory (one hits/boundaries/heads triple per invocation).
-#
-# The registry is THREAD-LOCAL, matching Spark's own per-thread driver
-# scoping (job groups, scheduler pools): concurrent run_pipeline calls on
-# different driver threads each see only their own frames, so one run's
-# release can never unpersist another run's in-flight planning caches
-# mid-job (which would silently degrade it to full recomputation).
-# Register and release from the same thread — the pipeline does.
-_PLANNING_CACHES = threading.local()
+def _boundary_rows(w: Walker, final: bool) -> list[dict]:
+    w.sections.clear()
+    a, r = w.abstract or {}, w.references or {}
+    if not final or not (a or r):
+        return []
+    return [{
+        "conv_id": w.conv_id,
+        "abs_turn": a.get("start_page"), "abs_start": a.get("start_pos"),
+        "abs_end": a.get("end_pos"), "abs_title": a.get("title"),
+        "abs_text": a.get("text"), "ref_turn": r.get("start_page"),
+        "ref_start": r.get("start_pos"), "ref_heading_pos": r.get("heading_pos"),
+        "ref_title": r.get("title"),
+    }]
 
 
-def _registered_planning_caches() -> list[DataFrame]:
-    """This driver thread's registered planning frames (mutable)."""
-    frames = getattr(_PLANNING_CACHES, "frames", None)
-    if frames is None:
-        frames = _PLANNING_CACHES.frames = []
-    return frames
+def _section_rows(w: Walker, final: bool) -> list[dict]:
+    if final:
+        w.finish()
+    rows = [
+        {
+            "conv_id": w.conv_id, "section_key": k, "start_turn": s["start_page"],
+            "start_pos": s["start_pos"], "end_turn": s["end_page"],
+            "end_pos": s["end_pos"], "title": s["title"], "number": s["number"],
+            "text": s["text"],
+        }
+        for k, s in w.sections.items()
+    ]
+    w.sections.clear()
+    return rows
 
 
-def release_planning_caches() -> None:
-    """Unpersist every planning frame cached by THIS driver thread's prior
-    ``segment_documents_distributed`` calls.  Call after the consuming
-    action (e.g. the pipeline's materialising writes) completes; unpersist
-    is safe even if a caller re-executes the returned frames later — they
-    recompute instead of reading cache.  Other threads' registrations are
-    untouched."""
-    frames = _registered_planning_caches()
-    while frames:
-        frames.pop().unpersist(blocking=False)
+def _reference_rows(w: Walker, final: bool) -> list[dict]:
+    w.sections.clear()
+    if not final:
+        return []
+    # ref_rank: the oracle dict's first-insertion order, which transcription
+    # and edoc rendering iterate
+    return [
+        {"conv_id": w.conv_id, "ref_number": n, "ref_rank": rank, "raw": raw}
+        for rank, (n, raw) in enumerate(w.refs.entries.items())
+    ]
+
+
+_PARTS = {
+    "boundaries": (
+        "conv_id string, abs_turn int, abs_start int, abs_end int, abs_title string, "
+        "abs_text string, ref_turn int, ref_start int, ref_heading_pos int, "
+        "ref_title string",
+        _boundary_rows,
+    ),
+    "sections": (
+        "conv_id string, section_key int, start_turn int, start_pos int, "
+        "end_turn int, end_pos int, title string, number string, text string",
+        _section_rows,
+    ),
+    "references": (
+        "conv_id string, ref_number int, ref_rank int, raw string",
+        _reference_rows,
+    ),
+}
 
 
 def segment_documents_distributed(turns_out: DataFrame) -> dict[str, DataFrame]:
-    """Full distributed segmentation: returns ``boundaries`` (abstract +
-    references coordinates per conv), ``sections`` (one row per section) and
-    ``references`` (one row per entry).
+    """Walker segmentation of every conversation of ``turns_out``:
+    ``boundaries`` (abstract and references coordinates, one row per
+    conversation that has either), ``sections`` (one row per section) and
+    ``references`` (one row per entry).  Section rows leave the walker as
+    each section closes, so no Python worker holds more than one batch, the
+    open section and the reference entries.  A document with no surviving
+    heading has no section rows (the doc-level assembler adds its single
+    "Full Text" section)."""
+    from . import documents
 
-    Not covered here (falls back to whole-doc handling, which is safe because
-    these documents are degenerate): the single-"Full Text"-section fallback
-    for documents with no headings and no boundaries — a doc-level assembler
-    unions those in from ``boundaries`` (both null) + plain reassembly.
-    """
-    pruned = turns_out.select("conv_id", "turn_idx", "page_text")
-    # hits / boundaries / heads are TINY planning-sized frames (a handful of
-    # rows per conversation, no page payloads) consumed by several downstream
-    # branches each.  Without persisting them, every branch of the final
-    # assembly DAG recomputes the whole upstream subtree — measured 54s for
-    # 3 mega-convs (≈15 redundant scan+shuffle subtrees) vs ~7s persisted.
-    # Payload-bearing frames (pruned pages, section texts) are NOT cached:
-    # at scale they are the skew tail and re-reading the materialised turns
-    # table is the cheaper, memory-safe path.
-    hits = page_hits(pruned).persist()
-    boundaries = elect_boundaries(hits, pruned).persist()
-    heads = section_heads(hits, boundaries, pruned).persist()
-    _registered_planning_caches().extend((hits, boundaries, heads))
-    sections = section_texts(heads, boundaries, turns_out)
-    refs = references_entries(boundaries, turns_out)
-    return {"boundaries": boundaries, "sections": sections, "references": refs}
+    tagged = documents.tagged_turns(turns_out)
+    routed = elect_boundaries(tagged)
+    return {
+        name: documents.assemble_sorted(tagged, routed, emit=emit, schema=schema)
+        for name, (schema, emit) in _PARTS.items()
+    }
+
+
+def assemble_documents_distributed(turns_out: DataFrame) -> DataFrame:
+    """DOCS_OUT rows with every conversation streamed through the walker —
+    the scale twin of ``documents.assemble_documents``."""
+    from . import documents
+
+    tagged = documents.tagged_turns(turns_out)
+    return documents.assemble_sorted(tagged, elect_boundaries(tagged))
+
+
+def release_planning_caches() -> None:
+    """No-op: the walker path persists no planning frames (kept for
+    callers written against the earlier cached-DAG design)."""

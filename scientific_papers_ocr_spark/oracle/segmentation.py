@@ -319,6 +319,19 @@ def full_text_fallback(pages: list[str]) -> dict[int, dict]:
     }
 
 
+def section_text(span: list[str], start_pos: int, end_pos: int) -> str:
+    """Body text of a section whose pages are ``span``: from ``start_pos``
+    on the first page to ``end_pos`` on the last, heading line dropped
+    (text after the first blank line), pages joined with one space.
+
+    Reference: the text step of elaborate_single_mmd_scientific.py:101-204.
+    """
+    if len(span) == 1:
+        return span[0][start_pos:end_pos].split("\n\n", 1)[1]
+    first = span[0][start_pos:].split("\n\n", 1)[1]
+    return " ".join([first, *span[1:-1], span[-1][:end_pos]])
+
+
 def extract_sections(
     pages: list[str],
     abstract: Optional[dict],
@@ -361,23 +374,13 @@ def extract_sections(
         else:
             end_page, end_pos = positions[keys[jj + 1]][0]
 
-        if end_page == start_page:
-            text = pages[start_page][start_pos:end_pos]
-            text = text.split("\n\n", 1)[1]
-        else:
-            span = list(pages[start_page : end_page + 1])
-            span[0] = span[0][start_pos:]
-            span[0] = span[0].split("\n\n", 1)[1]
-            span[-1] = span[-1][:end_pos]
-            text = " ".join(span)
-
         number = render_section_number(numerals[jj], key, jj)
         sections[key] = {
             "start_page": start_page,
             "start_pos": start_pos,
             "end_page": end_page,
             "end_pos": end_pos,
-            "text": text,
+            "text": section_text(pages[start_page : end_page + 1], start_pos, end_pos),
             "title": clean_section_title(title, number),
             "number": number,
         }

@@ -6,8 +6,8 @@ Topology (two Spark write jobs, one shuffle):
       → [narrow] fused per-turn tokenize/verify/repair  (mapInPandas)
       → write turns table (partitioned by bucket)
       → [wide]  exchange on bucket → per-conv assembly (one mapInPandas
-                serving both turns-table layouts; mega-conversations routed
-                to the distributed assembler)
+                serving both turns-table layouts; mega-conversations
+                streamed page by page through the same batch loop)
       → write docs table (partitioned by bucket); spans is a view over docs
       → commit lineage rows from the driver (counts + checksum per bucket,
         one parquet file, published by rename)
@@ -107,71 +107,47 @@ def _spans_view(docs: DataFrame) -> DataFrame:
     )
 
 
-def _probe_big_ids(src: DataFrame, threshold: int | None) -> DataFrame | None:
-    """Skew planning statistic: the (tiny, broadcastable) set of conv_ids
-    with at least ``threshold`` rows in ``src``, or None when no conversation
-    crosses it.  Mirrors how AQE re-plans from runtime statistics — but the
-    routing decision changes the PLAN (union with the distributed assembler),
-    so it must be resolved driver-side with one eager column-pruned
+def _probe_big_ids(src: DataFrame, threshold: int | None) -> list[str] | None:
+    """Skew planning statistic: the conv_ids with at least ``threshold``
+    rows in ``src`` (a handful, collected to the driver), or None when no
+    conversation crosses it.  Mirrors how AQE re-plans from runtime
+    statistics, resolved driver-side with one eager column-pruned
     count-by-key job over ``src``.  Call it on the cheapest table that knows
     conversation sizes: the committed turns parquet when one exists (a
     conv_id-only columnar scan), the raw input otherwise."""
     if not threshold:
         return None
-    candidates = (
+    big = (
         src.groupBy("conv_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .where(F.col("n") >= threshold)
         .select("conv_id")
+        .collect()
     )
-    return candidates if candidates.limit(1).count() > 0 else None
+    return [r["conv_id"] for r in big] or None
 
 
 def _assemble(
     inputs: DataFrame,
     verdicts: DataFrame,
-    big_ids: DataFrame | None,
+    big_ids: list[str] | None,
     store_page_text: str,
 ) -> DataFrame:
-    """Route each conversation of the turns table ``verdicts`` to its
-    assembler: the batched whole-conversation path, or, for the oversized
-    conv_ids in the small broadcastable ``big_ids``, the distributed
-    (boundary-election) path whose per-task state stays bounded.  None
-    keeps the plan the single-exchange fast path.  The layout decides only
-    whether the bucketed ``inputs`` join the batched assembler and whether
-    big conversations get their page text from an equi-join bounded to the
-    skew tail."""
-    with_input = store_page_text == "repaired_only"
-
-    def batched(inp: DataFrame, v: DataFrame) -> DataFrame:
-        if with_input:
-            return documents.assemble_documents_from_input(inp, v)
-        return documents.assemble_documents(v)
-
-    if big_ids is None:
-        return batched(inputs, verdicts)
-    ids = F.broadcast(big_ids)
-    small_in, small_v = (
-        f.join(ids, on="conv_id", how="left_anti") for f in (inputs, verdicts)
+    """The one assembler over the turns table ``verdicts`` (tag-unioned with
+    the bucketed ``inputs`` under ``repaired_only``).  The oversized
+    conversations ``big_ids`` are routed: their boundaries are elected
+    first (one small driver-collected job over their pages), and the
+    assembler streams them page by page instead of holding them whole.  The
+    docs plan is the same single-exchange plan either way."""
+    tagged = documents.tagged_turns(
+        verdicts, inputs if store_page_text == "repaired_only" else None
     )
-    big_in, big = (
-        f.join(ids, on="conv_id", how="left_semi") for f in (inputs, verdicts)
-    )
-    if with_input:
-        big = (
-            big.withColumnRenamed("page_text", "repaired")
-            .join(
-                big_in.select(
-                    "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "text"
-                ),
-                on=["conv_id", "turn_idx"],
-            )
-            .withColumn("page_text", F.coalesce("repaired", "text"))
-            .drop("repaired", "text")
+    routed = None
+    if big_ids:
+        routed = segment_distributed.elect_boundaries(
+            tagged.where(F.col("conv_id").isin(big_ids))
         )
-    return batched(small_in, small_v).unionByName(
-        segment_distributed.assemble_documents_distributed(big)
-    )
+    return documents.assemble_sorted(tagged, routed)
 
 
 def run_pipeline(
@@ -207,13 +183,16 @@ def run_pipeline(
     bucket; the 64 default fits this sandbox, not a 100 TB deployment.
 
     ``skew_turn_threshold``: conversations with at least this many turns are
-    assembled by the distributed (per-section) path instead of the
-    whole-conversation path.  The decision mirrors how AQE re-plans from
-    runtime statistics: the probe is one column-pruned (conv_id-only) count
-    over the input, which with ``output_dir`` set runs on a driver thread
-    concurrently with the narrow stage's write.  When no conversation
-    crosses the threshold the plan is exactly the single-exchange fast
-    path.  None disables routing.
+    routed: the same assembler streams them page by page through
+    ``segment_distributed.Walker`` instead of segmenting each one whole, so
+    no Python worker holds a whole mega-conversation.  The decision mirrors
+    how AQE re-plans from runtime statistics: the probe is one column-pruned
+    (conv_id-only) count over the input, which with ``output_dir`` set runs
+    on a driver thread concurrently with the narrow stage's write.  Routed
+    conversations first have their abstract and references boundaries
+    elected (one small job over their pages, collected to the driver).  The
+    docs plan is the single-exchange plan whether or not any conversation is
+    routed.  None disables routing.
 
     ``store_page_text="repaired_only"``: the 100 TB table layout — the turns
     table stores ``page_text`` only where column repair changed it, never a
@@ -223,9 +202,10 @@ def run_pipeline(
     assembler as the default layout, fed the input rows tag-unioned with
     the verdict rows (``assemble_documents_from_input``).  The lineage
     checksum covers ids, statuses and repaired content (the unchanged input
-    is content-addressed by the source table itself).  Mega-conversations
-    still route to the distributed assembler: their effective page text is
-    reconstructed with a join bounded to the skew tail.
+    is content-addressed by the source table itself).  Routed
+    mega-conversations take the same path: the walker is fed the merged
+    pages, and a turn's input and verdict rows may arrive in different
+    Arrow batches.
 
     The default stays ``"always"`` because it is the right plan for the
     LAZY (``output_dir=None``) path — nothing is materialised there, so the
@@ -380,10 +360,6 @@ def run_pipeline(
     if "err" in lineage_box:
         raise lineage_box["err"]
     _commit_lineage(lineage_box["table"], lineage_path, append)
-    # every output is committed; drop the skew-path planning caches so
-    # repeated run_pipeline calls in a long-lived session don't accumulate
-    # cached partitions in executor memory
-    segment_distributed.release_planning_caches()
     return {
         "turns": all_turns,
         "docs": all_docs,

@@ -86,6 +86,16 @@ def warm_python_workers(spark: SparkSession) -> None:
     spark.conf.set(key, "1")
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 48g: the driver heap of a
+    local session is the whole engine's heap, but it shares the host with
+    the Python workers and the JVM's own off-heap memory.  A fixed 48g
+    default let a long-lived session's JVM grow to 15 GB RSS on a 16 GB
+    host, where the kernel killed it."""
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 << 10, physical // 2 >> 20)}m"
+
+
 def build_session(
     app_name: str = "transcript-extraction",
     cores: int | None = None,
@@ -136,8 +146,11 @@ def build_session(
         # single-JVM local mode multiplexes all task threads' Arrow buffers
         # through one heap: size it like the SUM of executor heaps, not like
         # one executor, or GC serializes the workers (measured 74s → 32s on
-        # the wide stage going 8g → 48g)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # the wide stage going 8g → 48g) — as far as the host's memory allows
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # real Python tracebacks when a worker dies mid-Arrow-stream
         .config("spark.python.worker.faulthandler.enabled", "true")
         .config("spark.ui.enabled", "false")

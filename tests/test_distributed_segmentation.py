@@ -109,22 +109,11 @@ def test_assemble_documents_distributed_full_parity(turns_out, whole_doc):
         ), cid
 
 
-def test_no_whole_conversation_shuffle(spark, turns_out):
-    """The section-text range join must shuffle section spans + page rows,
-    never a collected whole conversation: assert the plan contains no
-    per-conv applyInPandas over the full page set (FlatMapGroupsInPandas on
-    page_text only appears in the tiny boundary-finishing step)."""
-    out = dist.segment_documents_distributed(turns_out)
-    plan = out["sections"]._jdf.queryExecution().optimizedPlan().toString()
-    assert "collect_list" in plan  # ordered concat of section pieces only
-
-
 def test_chunk_boundary_crossing_parity(spark):
-    """The binned range join (chunk = 1024 turns) must stay byte-identical
-    to the whole-conv assembler when section spans CROSS chunk boundaries —
-    a 2600-turn conversation spans chunks 0..2 and its trailing section
-    covers pages in more than one chunk (the explode path the 800-turn
-    fixtures never exercise)."""
+    """A 2600-turn conversation streamed through the walker spans many Arrow
+    batches (the carry a single fixture batch never exercises), and its
+    trailing section covers pages from more than one batch: the output must
+    stay byte-identical to the whole-conv assembler."""
     df = tsrc.corpus_dataframe(spark, num_convs=1, seed=41, turns_per_conv=2600)
     t = turnops.extract_turns(df, num_buckets=8).cache()
     try:
@@ -143,14 +132,15 @@ def test_chunk_boundary_crossing_parity(spark):
         t.unpersist()
 
 
-def test_references_entries_randomized_parity_with_oracle(spark):
-    """The entry-bounded references parser must reproduce the oracle's
-    ``parse_reference_entries(" ".join(pieces))`` on adversarial page splits:
-    markers split across the join seam (must NOT match), terminators at page
-    edges ("\\n" + "\\n" across the seam must NOT terminate), overlapping
-    terminators ("\\n\\n\\n"), duplicate numbers (last wins), markers with no
-    terminator after them (entry dropped), empty pages, and bodies spanning
-    many pages."""
+def test_references_entries_randomized_parity_with_oracle():
+    """The walker's piece-at-a-time references parser must reproduce the
+    oracle's ``parse_reference_entries(" ".join(pieces))`` on adversarial
+    page splits: markers split across the join seam (must NOT match),
+    terminators at page edges ("\\n" + "\\n" across the seam must NOT
+    terminate), overlapping terminators ("\\n\\n\\n"), duplicate numbers
+    (last wins), markers with no terminator after them (entry dropped),
+    empty pages, and bodies spanning many pages.  Pure Python: no Spark
+    job."""
     import random
 
     from scientific_papers_ocr_spark.oracle import segmentation as oracle_seg
@@ -161,7 +151,6 @@ def test_references_entries_randomized_parity_with_oracle(spark):
         "a", "bb ", " ", "x[3]y", "\n*", "\n\n[4]", "tail", "", "7",
         "[", "8]", "\n", "[9] body\n\n",
     ]
-    convs = []
     for c in range(200):
         n_pages = rng.randint(1, 8)
         pages = [
@@ -169,43 +158,22 @@ def test_references_entries_randomized_parity_with_oracle(spark):
             for _ in range(n_pages)
         ]
         # half the conversations also randomize the boundary, exercising the
-        # first-piece ref_start slice and the offset math downstream of it
+        # first-piece ref_start slice
         if c % 2:
-            ref_turn = rng.randrange(n_pages)
-            ref_start = rng.randint(0, len(pages[ref_turn])) if pages[ref_turn] else 0
+            rt = rng.randrange(n_pages)
+            rs = rng.randint(0, len(pages[rt])) if pages[rt] else 0
         else:
-            ref_turn, ref_start = 0, 0
-        convs.append((f"rc-{c:03d}", pages, ref_turn, ref_start))
-
-    rows = [
-        {"conv_id": cid, "turn_idx": i, "page_text": p}
-        for cid, pages, _, _ in convs
-        for i, p in enumerate(pages)
-    ]
-    turns_df = spark.createDataFrame(
-        rows, schema="conv_id string, turn_idx int, page_text string"
-    )
-    bounds_df = spark.createDataFrame(
-        [
-            {"conv_id": cid, "ref_turn": rt, "ref_start": rs}
-            for cid, _, rt, rs in convs
-        ],
-        schema="conv_id string, ref_turn int, ref_start int",
-    )
-
-    got_rows: dict[str, list] = {}
-    for r in dist.references_entries(bounds_df, turns_df).collect():
-        got_rows.setdefault(r["conv_id"], []).append(
-            (r["ref_rank"], r["ref_number"], r["raw"])
-        )
-
-    for cid, pages, rt, rs in convs:
+            rt, rs = 0, 0
         tail = [pages[rt][rs:]] + list(pages[rt + 1:])
+        parser = dist.ReferenceEntries()
+        for piece in tail:
+            parser.feed(piece)
         want = oracle_seg.parse_reference_entries(" ".join(tail))
-        got = [(n, raw) for _, n, raw in sorted(got_rows.get(cid, []))]
         # ORDERED comparison: the oracle dict's first-insertion order is part
         # of the contract (transcription/edoc rendering iterate it)
-        assert got == list(want.items()), (cid, pages, rt, rs)
+        assert list(parser.entries.items()) == list(want.items()), (
+            f"rc-{c:03d}", pages, rt, rs,
+        )
 
 
 def test_fuzzed_pages_whole_vs_distributed_parity(spark):
@@ -254,64 +222,3 @@ def test_fuzzed_pages_whole_vs_distributed_parity(spark):
     finally:
         t.unpersist()
         dist.release_planning_caches()
-
-
-def test_release_planning_caches_unpersists(spark):
-    """Every segment_documents_distributed call persists three planning
-    frames; release_planning_caches must unpersist ALL of them (across
-    multiple invocations) so long-lived sessions don't accumulate cached
-    partitions in executor memory."""
-    df = tsrc.corpus_dataframe(spark, num_convs=2, seed=7)
-    t = turnops.extract_turns(df, num_buckets=4)
-    before = len(dist._registered_planning_caches())
-    out1 = dist.segment_documents_distributed(t)
-    out2 = dist.segment_documents_distributed(t)
-    out1["sections"].count()
-    out2["sections"].count()
-    registered = dist._registered_planning_caches()[before:]
-    assert len(registered) == 6
-    assert all(f.storageLevel.useMemory for f in registered)
-    dist.release_planning_caches()
-    assert dist._registered_planning_caches() == []
-    assert not any(f.storageLevel.useMemory for f in registered)
-    # released frames still compute correctly (cache miss -> recompute)
-    assert out1["boundaries"].count() == out2["boundaries"].count()
-
-
-def test_release_planning_caches_is_scoped_per_thread(spark):
-    """The cache registry is thread-local: one pipeline's release must not
-    unpersist another concurrent pipeline's in-flight planning frames (that
-    would silently degrade the other run to full recomputation mid-job).
-
-    The two pipelines must run over DIFFERENT inputs, as concurrent real
-    runs do: Spark's CacheManager keys cached data by logical plan, so two
-    persists of the SAME plan share one cache entry that either handle's
-    unpersist removes — no registry scoping can (or should) isolate that."""
-    import threading
-
-    df = tsrc.corpus_dataframe(spark, num_convs=2, seed=7)
-    t = turnops.extract_turns(df, num_buckets=4)
-    df_other = tsrc.corpus_dataframe(spark, num_convs=3, seed=11)
-    t_other = turnops.extract_turns(df_other, num_buckets=4)
-    other: dict = {}
-
-    def other_pipeline():
-        out = dist.segment_documents_distributed(t_other)
-        out["sections"].count()
-        other["frames"] = list(dist._registered_planning_caches())
-
-    th = threading.Thread(target=other_pipeline)
-    th.start()
-    th.join()
-    assert len(other["frames"]) == 3
-    assert all(f.storageLevel.useMemory for f in other["frames"])
-
-    # this thread releases ITS registrations — the other thread's caches
-    # must stay persisted
-    out_here = dist.segment_documents_distributed(t)
-    out_here["sections"].count()
-    dist.release_planning_caches()
-    assert dist._registered_planning_caches() == []
-    assert all(f.storageLevel.useMemory for f in other["frames"])
-    for f in other["frames"]:
-        f.unpersist(blocking=False)

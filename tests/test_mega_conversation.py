@@ -1,22 +1,24 @@
-"""Distributed assembler at its DESIGN regime: conversations that genuinely
-cannot take the whole-conversation path (10^5+ turns, above the 32768 routing
-threshold).
+"""The walker path at its DESIGN regime: conversations that genuinely
+cannot be segmented whole (10^5+ turns, above the 32768 routing threshold).
 
 Two claims, each evidenced at its actual regime:
 
-1. **Parity**: at 120k turns the distributed assembler is byte-identical to
-   the whole-conversation oracle path, column for column.
+1. **Parity**: at 120k turns, streaming the conversation page by page
+   through ``segment_distributed``'s walker is byte-identical to the
+   whole-conversation oracle path, column for column.
 2. **Bounded task memory**: at 400k turns, under a HARD per-worker memory cap
    (``spark.executor.pyspark.memory`` → RLIMIT_AS, 450 MB), every
-   segmentation output (boundaries, sections, references) completes — no
-   task holds more than one page / one section's pages / one reference
-   entry's pages — while the whole-conversation path, whose single task must
-   materialise the entire ~240 MB conversation in pandas, FAILS under the
-   same cap.  The cap turns the memory claim into a pass/fail experiment
-   instead of an RSS heuristic.  (The full distributed doc-row build is
-   excluded from the capped run: a DOCS_OUT row carries the complete
-   ``transcription`` by schema, so materialising it is O(document) on any
-   engine — the bounded contract belongs to the segmentation phase.)
+   segmentation output (boundaries, sections, references) completes — the
+   boundary election scans one page at a time, and the walker holds one
+   Arrow batch, the open section's pages and at most one pending reference
+   entry, emitting each section as it closes — while the
+   whole-conversation path, whose single task must materialise the entire
+   ~240 MB conversation in pandas, FAILS under the same cap.  The cap turns
+   the memory claim into a pass/fail experiment instead of an RSS
+   heuristic.  (The full doc-row build is excluded from the capped run: a
+   DOCS_OUT row carries the complete ``transcription`` by schema, so
+   materialising it is O(document) on any engine — the bounded contract
+   belongs to the segmentation phase.)
 
 Marked slow: subprocess Spark sessions over 120k/400k-turn conversations.
 """

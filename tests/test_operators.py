@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from scientific_papers_ocr_spark.operators import (
     dedup,
-    documents as docops,
     multimodal,
     similarity,
     text_analysis,
@@ -73,9 +72,9 @@ class TestDedup:
         assert got == want
 
     def test_minhash_lsh_finds_near_dups(self, docs):
-        sh = dedup.word_shingles(docs)
+        arrs = dedup.word_shingle_arrays(docs)
         pairs = {(r["id_a"], r["id_b"]) for r in
-                 dedup.lsh_candidate_pairs(dedup.minhash_signatures(sh)).collect()}
+                 dedup.lsh_candidate_pairs(dedup.minhash_signatures_arrays(arrs)).collect()}
         assert (0, 1) in pairs          # exact dups share all bands
         assert (0, 2) in pairs or (1, 2) in pairs  # near dup shares some band
         assert (0, 3) not in pairs      # unrelated
@@ -90,12 +89,12 @@ class TestDedup:
         for i in range(2, 12):                               # weak overlaps
             rows.append((i, " ".join(words[i % 5:] + [f"tail{i} w{j}" for j in range(6)])))
         docs = spark.createDataFrame(rows, ["doc_id", "text"])
-        sh = dedup.word_shingles(docs)
+        arrs = dedup.word_shingle_arrays(docs)
         loose = {(r["id_a"], r["id_b"]) for r in dedup.lsh_candidate_pairs(
-            dedup.lsh_band_values(sh, n_bands=8, rows_per_band=1), n_bands=8
+            dedup.lsh_band_values_arrays(arrs, n_bands=8, rows_per_band=1), n_bands=8
         ).collect()}
         tight = {(r["id_a"], r["id_b"]) for r in dedup.lsh_candidate_pairs(
-            dedup.lsh_band_values(sh, n_bands=4, rows_per_band=2), n_bands=4
+            dedup.lsh_band_values_arrays(arrs, n_bands=4, rows_per_band=2), n_bands=4
         ).collect()}
         assert tight <= loose
         assert len(tight) < len(loose)
@@ -182,8 +181,9 @@ class TestDedup:
 
     def test_jaccard_exact_value(self, docs):
         sh = dedup.word_shingles(docs)
+        arrs = dedup.word_shingle_arrays(docs)
         pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
-                 for r in dedup.jaccard_pairs(sh, threshold=0.1).collect()}
+                 for r in dedup.jaccard_pairs(sh, arrs, threshold=0.1).collect()}
         assert pairs[(0, 1)] == 1.0
         assert 0.3 < pairs[(0, 2)] < 1.0
 
@@ -539,15 +539,6 @@ class TestReassembly:
         )
         got = turnops.flatten_parts_df(parts).collect()
         assert got[0]["text"] == "a b c"
-
-    def test_salted_reassembly_equals_plain(self, spark):
-        rows = [("c1", i, f"p{i}") for i in range(40)] + [("c2", i, f"q{i}") for i in range(3)]
-        df = spark.createDataFrame(rows, ["conv_id", "turn_idx", "page_text"])
-        plain = {r["conv_id"]: r["doc_text"] for r in docops.reassemble_text(df).collect()}
-        salted = {r["conv_id"]: r["doc_text"]
-                  for r in docops.reassemble_text_salted(df, salt_buckets=4).collect()}
-        assert plain == salted
-        assert plain["c1"] == " ".join(f"p{i}" for i in range(40))
 
     def test_explode_layout_blocks(self, spark):
         import json

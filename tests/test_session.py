@@ -48,3 +48,22 @@ def test_cores_from_env(recorder, monkeypatch):
     session.build_session()
     assert recorder.conf["master"] == "local[6, 2]"
 
+
+
+@pytest.mark.parametrize("gib", [1, 15, 64, 512])
+def test_driver_memory_default_fits_physical_memory(recorder, monkeypatch, gib):
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    page = 4096
+    sizes = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": (gib << 30) // page}
+    monkeypatch.setattr(os, "sysconf", lambda name: sizes[name])
+    session.build_session()
+    heap = recorder.conf["spark.driver.memory"]
+    assert heap.endswith("m")
+    assert 0 < int(heap[:-1]) << 20 < gib << 30
+    assert int(heap[:-1]) <= 48 << 10
+
+
+def test_driver_memory_from_env(recorder, monkeypatch):
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    session.build_session()
+    assert recorder.conf["spark.driver.memory"] == "3g"

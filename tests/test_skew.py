@@ -1,7 +1,7 @@
 """Skew handling: a zipf-skewed corpus plus one forced mega-conversation must
-produce oracle-exact output through BOTH assembly paths (whole-conversation
-and distributed), and the narrow stage must stay shuffle-free regardless of
-skew."""
+produce oracle-exact output whether a conversation is segmented whole or
+streamed through the walker, and the narrow stage must stay shuffle-free
+regardless of skew."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -57,19 +57,24 @@ def test_distributed_matches_whole_doc_on_skew(spark, skewed_df):
     assert whole == distd
 
 
-def test_pipeline_routes_mega_convs_to_distributed_assembler(spark, skewed_df):
-    """run_pipeline with a low skew threshold must send the 800-turn conv
-    through the distributed assembler and everything else through the batched
-    path — with output identical to the unrouted pipeline."""
+def test_pipeline_routes_mega_convs_to_distributed_assembler(
+    spark, skewed_df, routed_calls
+):
+    """run_pipeline with a low skew threshold must stream the 800-turn conv
+    through the walker and segment everything else whole — in the one
+    assembler, with output identical to the unrouted pipeline."""
     from scientific_papers_ocr_spark import pipeline
 
     routed = pipeline.run_pipeline(
         spark, skewed_df, output_dir=None, num_buckets=8, skew_turn_threshold=500
     )["docs"]
+    assert routed_calls == [{"conv-99-00000-full_paper"}], routed_calls
+    # still one assembler over the cached input: no second branch, no
+    # segmentation DAG
     plan = routed._jdf.queryExecution().executedPlan().toString()
-    # the distributed assembler's boundary election runs window functions;
-    # the batched fast path has none
-    assert "Window" in plan, "routing should engage the distributed assembler"
+    above_cache = plan.split("InMemoryTableScan")[0]
+    assert "Union" not in above_cache and "Window" not in above_cache, plan
+    assert above_cache.count("Exchange hashpartitioning") == 1, plan
 
     unrouted = pipeline.run_pipeline(
         spark, skewed_df, output_dir=None, num_buckets=8, skew_turn_threshold=None
@@ -80,14 +85,16 @@ def test_pipeline_routes_mega_convs_to_distributed_assembler(spark, skewed_df):
     assert "conv-99-00000-full_paper" in got
 
 
-def test_pipeline_stays_fast_path_without_skew(spark, skewed_df):
+def test_pipeline_stays_fast_path_without_skew(spark, skewed_df, routed_calls):
     """with no conv over the threshold the routed pipeline must compile to the
-    plain single-assembler plan (no Union, no distributed DAG)."""
+    plain single-assembler plan (no Union, no distributed DAG) and route
+    nothing."""
     from scientific_papers_ocr_spark import pipeline
 
     docs = pipeline.run_pipeline(
         spark, skewed_df, output_dir=None, num_buckets=8, skew_turn_threshold=10_000
     )["docs"]
+    assert routed_calls == [None], routed_calls
     plan = docs._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
 

@@ -105,11 +105,11 @@ def _docs_by_conv(docs) -> dict:
     return out
 
 
-def test_repaired_only_with_skew_routing_matches_default(spark):
-    """Oversized convs route to the distributed assembler — under
-    repaired_only after reconstructing effective text via the bounded join —
-    and every output column equals the unrouted default mode, on both
-    turns-table layouts."""
+def test_repaired_only_with_skew_routing_matches_default(spark, routed_calls):
+    """Oversized convs are streamed through the walker — under repaired_only
+    with their boundaries elected from the merged page text — and every
+    output column equals the unrouted default mode, on both turns-table
+    layouts."""
     zipf = fixtures.spark_corpus(spark, 8, seed=42, zipf_max_turns=60).cache()
     want = _docs_by_conv(
         pipeline.run_pipeline(
@@ -122,9 +122,7 @@ def test_repaired_only_with_skew_routing_matches_default(spark):
             spark, zipf, output_dir=None, num_buckets=8,
             store_page_text=mode, skew_turn_threshold=10,
         )["docs"]
-        # the distributed assembler's boundary election runs window
-        # functions; the batched path has none
-        assert "Window" in routed._jdf.queryExecution().executedPlan().toString(), mode
+        assert routed_calls[-1], (mode, routed_calls)
         assert _docs_by_conv(routed) == want, mode
 
 
@@ -151,6 +149,35 @@ def test_layouts_match_when_conversations_straddle_batches(spark, corpus):
         spark.conf.set(key, saved)
     assert max(d["n_turns"] for d in always.values()) > 3
     assert slim == always
+
+
+def test_routed_conversations_straddle_batches_on_both_layouts(spark, routed_calls):
+    """With 7-row Arrow batches, routed conversations span many batches and,
+    under repaired_only, a turn's input/verdict row pair is split across a
+    batch boundary (pairs start at even rows, so every odd boundary splits
+    one).  The walker's output must equal the whole-conversation path on
+    every DOCS_OUT column, on both layouts."""
+    corpus = fixtures.spark_corpus(spark, 12, seed=5, zipf_max_turns=80).cache()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        for mode in ("repaired_only", "always"):
+            docs = {}
+            for threshold in (None, 8):
+                docs[threshold] = _docs_by_conv(
+                    pipeline.run_pipeline(
+                        spark, corpus, output_dir=None, num_buckets=4,
+                        store_page_text=mode, skew_turn_threshold=threshold,
+                    )["docs"]
+                )
+            routed = routed_calls[-1]
+            assert routed and len(routed) < len(docs[None]), (mode, routed)
+            assert all(docs[None][c]["n_turns"] > 7 for c in routed), mode
+            assert docs[8] == docs[None], mode
+    finally:
+        spark.conf.set(key, saved)
+        corpus.unpersist()
 
 
 def test_bucket_aligned_input_matches_unaligned(spark, corpus, tmp_path_factory):

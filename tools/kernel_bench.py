@@ -6,8 +6,8 @@ reported with all reps shown, and nothing else running while it measures.
 Measures, per core, on the real bench corpus:
   * narrow kernel  — ``operators.turns._process_batch`` (repaired_only +
     clean text, the graded bench emission)
-  * assembly kernel — ``operators.documents._assemble_rows`` over whole
-    conversations
+  * assembly kernel — ``oracle.segmentation.segment_document`` plus
+    ``operators.documents._assemble_rows`` over whole conversations
 
 Usage:  python tools/kernel_bench.py [n_turns]          (default 60000)
 
@@ -34,6 +34,7 @@ import pyarrow.parquet as pq  # noqa: E402
 
 from scientific_papers_ocr_spark.operators import documents  # noqa: E402
 from scientific_papers_ocr_spark.operators.turns import _process_batch  # noqa: E402
+from scientific_papers_ocr_spark.oracle import segmentation  # noqa: E402
 
 CORPUS = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -89,8 +90,11 @@ def main(n_turns: int = 60000) -> None:
     ]
 
     def assemble_all() -> None:
-        for c in convs:
-            documents._assemble_rows(*c)
+        for cid, bucket, pages, metas in convs:
+            documents._assemble_rows(
+                cid, bucket, segmentation.segment_document(pages),
+                next((m for m in metas if m), None), len(pages),
+            )
 
     best, reps = _best_of(assemble_all, reps=5)
     print(
