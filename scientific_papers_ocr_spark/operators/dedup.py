@@ -13,9 +13,9 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from .text_analysis import normalized_fingerprint
+from .text_analysis import normalized_fingerprint, normalized_text
 
 DEFAULT_SEEDS = ("s0", "s1", "s2", "s3")
 
@@ -34,6 +34,25 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
+def _words(docs: DataFrame, id_col: str, text_col: str, min_words: int) -> DataFrame:
+    """(id, ``words``) rows of the docs with at least ``min_words`` words:
+    ``normalized_text`` split on single spaces, as the SQL oracles split
+    it."""
+    words = F.split(normalized_text(F.col(text_col)), " ")
+    return docs.select(F.col(id_col), words.alias("words")).where(
+        F.size("words") >= min_words
+    )
+
+
+def _shingles(k: int) -> Column:
+    """Every k-word shingle of the ``words`` column, in word order."""
+    words = F.col("words")
+    return F.transform(
+        F.sequence(F.lit(0), F.size(words) - F.lit(k)),
+        lambda i: F.array_join(F.slice(words, i + 1, k), " "),
+    )
+
+
 def word_shingle_arrays(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
 ) -> DataFrame:
@@ -44,15 +63,8 @@ def word_shingle_arrays(
     per-(doc, shingle) distinct without shuffling every shingle.  Narrow —
     zero exchanges; per-doc aggregates (signature mins, sizes) derive from
     the array without ever exploding."""
-    words = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " ")), " ")
-    with_words = docs.select(F.col(id_col), words.alias("words")).where(
-        F.size("words") >= k
-    )
-    idxs = F.sequence(F.lit(0), F.size("words") - F.lit(k))
-    shingle = lambda i: F.array_join(F.slice(F.col("words"), i + 1, k), " ")  # noqa: E731
-    return with_words.select(
-        F.col(id_col),
-        F.array_distinct(F.transform(idxs, shingle)).alias("shingles"),
+    return _words(docs, id_col, text_col, k).select(
+        F.col(id_col), F.array_distinct(_shingles(k)).alias("shingles")
     )
 
 
@@ -66,15 +78,8 @@ def word_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     matters: projecting the array in one select and exploding it in the next
     measured ~9x slower than this (the split defeats whole-stage fusion and
     re-copies the materialised array per row)."""
-    words = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " ")), " ")
-    with_words = docs.select(F.col(id_col), words.alias("words")).where(
-        F.size("words") >= k
-    )
-    idxs = F.sequence(F.lit(0), F.size("words") - F.lit(k))
-    shingle = lambda i: F.array_join(F.slice(F.col("words"), i + 1, k), " ")  # noqa: E731
-    return with_words.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(F.transform(idxs, shingle))).alias("shingle"),
+    return _words(docs, id_col, text_col, k).select(
+        F.col(id_col), F.explode(F.array_distinct(_shingles(k))).alias("shingle")
     )
 
 
@@ -89,22 +94,14 @@ def minhash_signatures_arrays(
     Each band is ``array_min`` of the per-seed hashes computed row-locally, so
     the whole signature table is a NARROW projection — no explode, no
     sort-based min aggregate, no exchange."""
+    # transform() calls the lambda at once, so it sees this iteration's seed
     cols = [
         F.array_min(
-            F.transform(
-                F.col("shingles"), _make_seed_hash("#" + s)
-            )
+            F.transform(F.col("shingles"), lambda sh: F.md5(F.concat(sh, F.lit("#" + s))))
         ).alias(f"band_{i}")
         for i, s in enumerate(seeds)
     ]
     return shingle_arrays.select(F.col(id_col), *cols)
-
-
-def _make_seed_hash(suffix: str):
-    def h(s):
-        return F.md5(F.concat(s, F.lit(suffix)))
-
-    return h
 
 
 def lsh_band_values_arrays(
@@ -125,12 +122,6 @@ def lsh_band_values_arrays(
     ``lsh_candidate_pairs`` unchanged."""
     seeds = tuple(f"s{i}" for i in range(n_bands * rows_per_band))
     sigs = minhash_signatures_arrays(shingle_arrays, id_col=id_col, seeds=seeds)
-    return _fold_bands(sigs, id_col, n_bands, rows_per_band)
-
-
-def _fold_bands(
-    sigs: DataFrame, id_col: str, n_bands: int, rows_per_band: int
-) -> DataFrame:
     if rows_per_band == 1:
         return sigs
     bands = [
@@ -186,8 +177,12 @@ def lsh_candidate_pairs(
     )
 
 
+def _jaccard(n_common: Column, size_a: Column, size_b: Column) -> Column:
+    return F.round(n_common / (size_a + size_b - n_common), 4)
+
+
 def jaccard_pairs(
-    shingles: DataFrame,
+    shingles: DataFrame | None,
     shingle_arrays: DataFrame,
     id_col: str = "doc_id",
     threshold: float = 0.5,
@@ -197,7 +192,8 @@ def jaccard_pairs(
 
     ``shingle_arrays`` is the ``word_shingle_arrays`` frame the exploded
     ``shingles`` came from; the per-doc shingle counts are its narrow
-    ``size(shingles)`` projection.
+    ``size(shingles)`` projection.  ``shingles`` is read only without
+    ``candidates`` (pass None with them).
 
     With ``candidates`` (e.g. LSH output) only the candidate pairs are
     scored, and no per-shingle rows are ever joined, shuffled or
@@ -218,9 +214,7 @@ def jaccard_pairs(
         )
         paired = candidates.join(arr_a, on="id_a").join(arr_b, on="id_b")
         n_common = F.size(F.array_intersect("_sh_a", "_sh_b"))
-        jac = F.round(
-            n_common / (F.size("_sh_a") + F.size("_sh_b") - n_common), 4
-        )
+        jac = _jaccard(n_common, F.size("_sh_a"), F.size("_sh_b"))
         return (
             # n_common >= 1 mirrors the join path exactly: a pair with no
             # shared shingle never appears there, whatever the threshold
@@ -248,9 +242,7 @@ def jaccard_pairs(
         .select(
             "id_a",
             "id_b",
-            F.round(
-                F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common")), 4
-            ).alias("jaccard"),
+            _jaccard(F.col("n_common"), F.col("size_a"), F.col("size_b")).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )
@@ -275,16 +267,10 @@ def winnow_fingerprints(
     matching."""
     from pyspark.sql import Window
 
-    words = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " ")), " ")
-    with_words = docs.select(F.col(id_col), words.alias("words")).where(
-        F.size("words") >= k + w - 1
-    )
-    idxs = F.sequence(F.lit(0), F.size("words") - F.lit(k))
-    shingle = lambda i: F.array_join(F.slice(F.col("words"), i + 1, k), " ")  # noqa: E731
-    positioned = with_words.select(
+    positioned = _words(docs, id_col, text_col, k + w - 1).select(
         F.col(id_col),
         (F.size("words") - F.lit(k)).alias("max_pos"),
-        F.posexplode(F.transform(idxs, shingle)).alias("pos", "shingle"),
+        F.posexplode(_shingles(k)).alias("pos", "shingle"),
     )
     win = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1)
     return (

@@ -347,21 +347,3 @@ def explode_spans(docs_out: DataFrame) -> DataFrame:
     return docs_out.select(
         "conv_id", "bucket", F.inline(F.concat(abstract, sections))
     )
-
-
-def reassemble_text(turns_out: DataFrame) -> DataFrame:
-    """A5 page reassembly as a pure DataFrame aggregation (no pandas): page
-    texts joined with a single space in turn order, deterministic via
-    ``array_sort(collect_list(struct(...)))``.
-
-    Reference: check_transcription.py:104-118.
-    """
-    return turns_out.groupBy("conv_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("turn_idx", "page_text"))),
-                lambda s: s["page_text"],
-            ),
-            " ",
-        ).alias("doc_text")
-    )

@@ -30,9 +30,17 @@ nearest centroid, so they co-bucket with the query.
 
 from __future__ import annotations
 
+import functools
+import logging
+import struct
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..sources.transcripts import write_partitioned
+
 _HEX = "0123456789abcdef"
+_log = logging.getLogger(__name__)
 
 
 def _dot(a, b):
@@ -49,28 +57,56 @@ def _norm(a):
     )
 
 
-def cosine_to_query(df: DataFrame, query_vec: list[float], vec_col: str = "embedding") -> DataFrame:
-    """Cosine similarity of every row to a literal query vector — one narrow
-    scan, no shuffle; the query rides along as a broadcast literal array."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = F.col(vec_col)
-    return df.withColumn(
-        "cosine", F.round(_dot(v, q) / (_norm(v) * _norm(q)), 4)
-    )
+def _cosine(a: Column, b: Column, digits: int) -> Column:
+    """Cosine of two vector columns rounded to ``digits`` — the exact twin
+    of the oracles' ``round(list_dot_product(a, b) / (sqrt(..a..) *
+    sqrt(..b..)), digits)``."""
+    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), digits)
 
 
-def brute_force_topk(
-    df: DataFrame, query_vec: list[float], k: int = 10, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Exact top-k neighbours of a query vector.  The global top-k is a
-    TakeOrderedAndProject (per-partition top-k then merge — no full sort
-    shuffle); ties broken on the id for determinism."""
+def _topk(cand: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Score every ``cand`` row against its ``qvec`` column and keep the k
+    best, ties broken on the id for determinism.  The global top-k plans as
+    a TakeOrderedAndProject (per-partition top-k then merge — no full sort
+    shuffle)."""
     return (
-        cosine_to_query(df, query_vec, vec_col=vec_col)
-        .select(id_col, "cosine")
+        cand.select(id_col, _cosine(F.col(vec_col), F.col("qvec"), 4).alias("cosine"))
         .orderBy(F.desc("cosine"), F.col(id_col))
         .limit(k)
     )
+
+
+def _query_row(query: DataFrame) -> DataFrame:
+    """A single-row query frame with its first column as ``qvec``."""
+    return query.select(F.col(query.columns[0]).alias("qvec"))
+
+
+def _with_query(
+    df: DataFrame, query: DataFrame | list[float], dim: dict[str, Column] | None = None
+) -> DataFrame:
+    """``df`` with the query vector attached as ``qvec``, plus the ``dim``
+    columns (expressions over ``qvec``).  A single-row query frame joins in
+    as a broadcast dim table, so ``dim`` is computed on that one row and
+    nothing touches the driver; a literal list rides along as a literal
+    array."""
+    if isinstance(query, DataFrame):
+        q = _query_row(query)
+        return df.crossJoin(F.broadcast(q.withColumns(dim) if dim else q))
+    out = df.withColumn("qvec", F.array(*[F.lit(float(x)) for x in query]))
+    return out.withColumns(dim) if dim else out
+
+
+def brute_force_topk(
+    df: DataFrame,
+    query: DataFrame | list[float],
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact top-k neighbours of a query vector (a single-row frame whose
+    first column is the vector, or a literal list): one narrow scan, no
+    shuffle."""
+    return _topk(_with_query(df, query), k, id_col, vec_col)
 
 
 def _plane_weight(p: int, idx: Column) -> Column:
@@ -112,50 +148,40 @@ def _plane_weights_py(p: int, dim: int = _PRE_DIM) -> list[float]:
     return out
 
 
-# the literal weight array per plane, built ONCE per driver process:
-# F.lit(list) costs one py4j round-trip per element (~0.5 s per 1024-long
-# plane, dominating the query BUILD time), so the array goes through the SQL
-# parser as a single `array(<repr>D, ...)` expression instead — one py4j
-# call, and Double.parseDouble of Python's shortest round-trip repr
-# reproduces each weight bit-for-bit.  Columns are immutable and
-# session-independent, so caching per plane is safe.
-_WEIGHT_COLS: dict[int, Column] = {}
-
-
+@functools.cache
 def _plane_weights_lit(p: int) -> Column:
-    col = _WEIGHT_COLS.get(p)
-    if col is None:
-        body = ",".join(repr(w) + "D" for w in _plane_weights_py(p))
-        col = F.expr(f"array({body})")
-        # fold the 1024-element array() call into ONE resolved Literal up
-        # front: otherwise every query that embeds this column re-walks the
-        # 1024-node unresolved tree through analysis + constant folding
-        # (~1.5 s of driver time per ann query build, measured).  Best
-        # effort — the parsed column above is semantically identical.
-        try:
-            from pyspark.sql import SparkSession
-
-            spark = SparkSession.getActiveSession()
-            jdf = spark.range(1).select(col.alias("w"))._jdf
-            jlit = jdf.queryExecution().optimizedPlan().expressions().apply(0).child()
-            if jlit.getClass().getSimpleName() == "Literal":
-                from pyspark.sql.column import Column as _PyColumn
-
-                col = _PyColumn(
-                    spark._jvm.org.apache.spark.sql.classic.ExpressionUtils.column(jlit)
-                )
-        except Exception:
-            pass
-        _WEIGHT_COLS[p] = col
-    return col
+    """Plane ``p``'s literal weight array, built once per driver process
+    (~10 ms; Columns are immutable and session-independent)."""
+    return _literal_doubles(_plane_weights_py(p))
 
 
-def warm_plane_weights(n_planes: int = 8) -> None:
-    """Fold every plane's literal weight array up front (requires an active
-    session).  One-time per process (~0.15 s/plane); ingest entry points
-    call this so the first probe query's build does not pay it."""
-    for p in range(n_planes):
-        _plane_weights_lit(p)
+def _literal_doubles(values: list[float]) -> Column:
+    """``values`` as ONE resolved ``array<double>`` Literal, through the
+    public ``functions.lit`` on a JVM ``double[]`` that crosses py4j as a
+    single byte array: four py4j calls whatever the length (``F.lit(list)``
+    costs one per element, ~0.5 s per 1024-long plane), and nothing left to
+    analyse (an ``array(...)`` SQL expression re-walks its 1024-node tree
+    through analysis and constant folding in every query that embeds it,
+    ~1.5 s of driver time per ann query build, measured).  The bytes are the
+    IEEE doubles themselves, so every weight arrives bit-for-bit."""
+    try:
+        sc = SparkContext._active_spark_context
+        jvm = sc._jvm
+        raw = bytearray(struct.pack(f">{len(values)}d", *values))
+        arr = sc._gateway.new_array(jvm.double, len(values))
+        jvm.java.nio.ByteBuffer.wrap(raw).asDoubleBuffer().get(arr)
+        return Column(jvm.org.apache.spark.sql.functions.lit(arr))
+    except Exception:  # noqa: BLE001 — e.g. no JVM gateway (Spark Connect)
+        _warn_unfolded()
+        return F.expr("array(" + ",".join(repr(v) + "D" for v in values) + ")")
+
+
+@functools.cache
+def _warn_unfolded() -> None:
+    _log.warning(
+        "LSH plane weights could not be built as literals; using an unfolded "
+        "array() expression that every ANN query build re-analyses"
+    )
 
 
 def bucket_expr(vec: Column, n_planes: int) -> Column:
@@ -227,31 +253,15 @@ def ann_topk(
     100 TB the bucket filter is a partition-pruning predicate on a
     bucket-partitioned table.
     """
-    bucketed = lsh_bucket(df, n_planes=n_planes, vec_col=vec_col)
-    if isinstance(query, DataFrame):
-        qdim = query.select(
-            F.col(query.columns[0]).alias("qvec")
-        ).withColumn("q_bucket", bucket_expr(F.col("qvec"), n_planes))
-        with_q = bucketed.crossJoin(F.broadcast(qdim))
-    else:
-        qvec = F.array(*[F.lit(float(x)) for x in query])
-        with_q = bucketed.withColumn("qvec", qvec).withColumn(
-            "q_bucket", bucket_expr(qvec, n_planes)
-        )
+    with_q = _with_query(
+        lsh_bucket(df, n_planes=n_planes, vec_col=vec_col),
+        query,
+        {"q_bucket": bucket_expr(F.col("qvec"), n_planes)},
+    )
     cand = with_q.where(
         _hamming(F.col("lsh_bucket"), F.col("q_bucket"), n_planes) <= probe_hamming
     )
-    v = F.col(vec_col)
-    return (
-        cand.select(
-            id_col,
-            F.round(_dot(v, F.col("qvec")) / (_norm(v) * _norm(F.col("qvec"))), 4).alias(
-                "cosine"
-            ),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
+    return _topk(cand, k, id_col, vec_col)
 
 
 def write_bucket_partitioned(
@@ -267,13 +277,13 @@ def write_bucket_partitioned(
     instead of a full-scan bucket recomputation.  ``repartition`` on the
     bucket first so each partition directory is written by one task (no
     tasks×buckets small-file explosion)."""
-    bucketed = lsh_bucket(df, n_planes=n_planes, vec_col=vec_col)
-    (
-        bucketed.repartition("lsh_bucket")
-        .write.mode("overwrite")
-        .partitionBy("lsh_bucket")
-        .parquet(path)
-    )
+    _write_partitioned(lsh_bucket(df, n_planes=n_planes, vec_col=vec_col), "lsh_bucket", path)
+
+
+def _write_partitioned(df: DataFrame, key: str, path: str) -> None:
+    """Replace the layout at ``path`` with ``df`` partitioned by ``key``, one
+    writing task per key (repartitioned on it first)."""
+    df.repartition(key).write.mode("overwrite").partitionBy(key).parquet(path)
 
 
 def upsert_bucket_partitioned(
@@ -339,13 +349,7 @@ def upsert_bucket_partitioned(
     merged = merged.persist()
     try:
         kept_set = {r[0] for r in merged.select("lsh_bucket").distinct().collect()}
-        (
-            merged.repartition("lsh_bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("lsh_bucket")
-            .parquet(path)
-        )
+        write_partitioned(merged, path, partition_col="lsh_bucket")
     finally:
         merged.unpersist()
     _delete_partition_dirs(
@@ -378,7 +382,7 @@ def probe_buckets(
     supported).  Stays fully lazy — the bucket is computed on the one
     broadcast row, never on the driver."""
     assert probe_hamming <= 1, "multi-probe beyond 1 bit flip not implemented"
-    qdim = query.select(F.col(query.columns[0]).alias("qvec")).withColumn(
+    qdim = _query_row(query).withColumn(
         "q_bucket", bucket_expr(F.col("qvec"), n_planes)
     )
     probes = [F.col("q_bucket")]
@@ -412,17 +416,7 @@ def ann_topk_pruned(
     cand = bucketed.join(
         F.broadcast(probes), bucketed[bucket_col] == probes["probe_bucket"]
     )
-    v = F.col(vec_col)
-    return (
-        cand.select(
-            id_col,
-            F.round(_dot(v, F.col("qvec")) / (_norm(v) * _norm(F.col("qvec"))), 4).alias(
-                "cosine"
-            ),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
+    return _topk(cand, k, id_col, vec_col)
 
 
 def ivf_assign(
@@ -440,11 +434,12 @@ def ivf_assign(
     probe-time routing partition pruning."""
     a = df.alias("a")
     c = centroids.alias("c")
-    av, cv = F.col(f"a.{vec_col}"), F.col(f"c.{centroid_vec_col}")
     scored = a.join(F.broadcast(c)).select(
         f"a.{id_col}",
         F.col(f"c.{centroid_id_col}").alias("cand_cell"),
-        F.round(_dot(av, cv) / (_norm(av) * _norm(cv)), 6).alias("cell_cos"),
+        _cosine(F.col(f"a.{vec_col}"), F.col(f"c.{centroid_vec_col}"), 6).alias(
+            "cell_cos"
+        ),
     )
     return scored.groupBy(id_col).agg(
         F.max_by(
@@ -494,12 +489,14 @@ def train_ivf_centroids(
     cents = {i: np.asarray(r[vec_col], dtype=float) for i, r in enumerate(seed)}
     dim = len(next(iter(cents.values())))
 
-    for _ in range(iters):
-        cdf = spark.createDataFrame(
+    def centroid_table() -> DataFrame:
+        return spark.createDataFrame(
             [(int(i), [float(x) for x in v]) for i, v in sorted(cents.items())],
             ["centroid_id", "centroid"],
         )
-        assigned = ivf_assign(df, cdf, id_col=id_col, vec_col=vec_col)
+
+    for _ in range(iters):
+        assigned = ivf_assign(df, centroid_table(), id_col=id_col, vec_col=vec_col)
         fact = df.select(id_col, vec_col).join(assigned, on=id_col)
         # per-cell (Σ vector, n) as D independent sum() aggregates — each is
         # algebraic, so partials combine map-side and the shuffle carries k
@@ -514,11 +511,7 @@ def train_ivf_centroids(
         for r in stats:
             if r["n"] > 0:
                 cents[r["ivf_cell"]] = np.asarray(r["vec_sum"], dtype=float) / r["n"]
-
-    return spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in sorted(cents.items())],
-        ["centroid_id", "centroid"],
-    )
+    return centroid_table()
 
 
 def ivf_topk(
@@ -534,39 +527,26 @@ def ivf_topk(
     table (broadcast), probe the ``n_probe`` nearest cells, exact-score only
     vectors assigned there.  The alternative scale path to LSH bucketing —
     same shape as FAISS IVF-Flat: coarse quantizer → inverted lists → exact
-    scan of probed lists."""
-    assigned = ivf_assign(df, centroids, id_col=id_col, vec_col=vec_col)
-    fact = df.join(assigned, on=id_col)
+    scan of probed lists.  This is ``ivf_topk_pruned`` over the assignment
+    join, recomputed per probe."""
+    fact = df.join(ivf_assign(df, centroids, id_col=id_col, vec_col=vec_col), on=id_col)
+    return ivf_topk_pruned(fact, centroids, query, k, n_probe, id_col, vec_col)
 
-    q = query.select(F.col(query.columns[0]).alias("qvec"))
-    qcells = (
-        F.broadcast(q)
+
+def _nearest_cells(centroids: DataFrame, query: DataFrame, n_probe: int) -> DataFrame:
+    """The query's ``n_probe`` nearest centroid cells (broadcast query row ×
+    broadcast centroid table), each row carrying ``qvec`` and its ``cell``
+    id; ties go to the smaller id, as in ``ivf_assign``."""
+    return (
+        F.broadcast(_query_row(query))
         .join(F.broadcast(centroids))
         .select(
             "qvec",
             F.col("centroid_id").alias("cell"),
-            F.round(
-                _dot(F.col("qvec"), F.col("centroid"))
-                / (_norm(F.col("qvec")) * _norm(F.col("centroid"))),
-                6,
-            ).alias("qcos"),
+            _cosine(F.col("qvec"), F.col("centroid"), 6).alias("qcos"),
         )
         .orderBy(F.desc("qcos"), F.col("cell"))
         .limit(n_probe)
-    )
-    cand = fact.join(
-        F.broadcast(qcells), on=fact["ivf_cell"] == qcells["cell"]
-    )
-    v = F.col(vec_col)
-    return (
-        cand.select(
-            id_col,
-            F.round(_dot(v, F.col("qvec")) / (_norm(v) * _norm(F.col("qvec"))), 4).alias(
-                "cosine"
-            ),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
     )
 
 
@@ -582,14 +562,8 @@ def write_ivf_partitioned(
     ``ivf_cell`` — the FAISS inverted-list structure as a table layout.
     Probes afterwards read only the probed cells' directories (partition
     pruning) instead of re-running the quantizer over the whole table."""
-    assigned = ivf_assign(df, centroids, id_col=id_col, vec_col=vec_col)
-    fact = df.join(assigned, on=id_col)
-    (
-        fact.repartition("ivf_cell")
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(path)
-    )
+    fact = df.join(ivf_assign(df, centroids, id_col=id_col, vec_col=vec_col), on=id_col)
+    _write_partitioned(fact, "ivf_cell", path)
 
 
 def ivf_topk_pruned(
@@ -606,34 +580,9 @@ def ivf_topk_pruned(
     in as a broadcast dim keyed on the partition column, so the scan
     dynamically prunes to the probed cell directories.  Result-identical to
     ``ivf_topk`` on the same data (parity-tested)."""
-    q = query.select(F.col(query.columns[0]).alias("qvec"))
-    qcells = (
-        F.broadcast(q)
-        .join(F.broadcast(centroids))
-        .select(
-            "qvec",
-            F.col("centroid_id").alias("cell"),
-            F.round(
-                _dot(F.col("qvec"), F.col("centroid"))
-                / (_norm(F.col("qvec")) * _norm(F.col("centroid"))),
-                6,
-            ).alias("qcos"),
-        )
-        .orderBy(F.desc("qcos"), F.col("cell"))
-        .limit(n_probe)
-    )
+    qcells = _nearest_cells(centroids, query, n_probe)
     cand = bucketed.join(F.broadcast(qcells), bucketed["ivf_cell"] == qcells["cell"])
-    v = F.col(vec_col)
-    return (
-        cand.select(
-            id_col,
-            F.round(_dot(v, F.col("qvec")) / (_norm(v) * _norm(F.col("qvec"))), 4).alias(
-                "cosine"
-            ),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
+    return _topk(cand, k, id_col, vec_col)
 
 
 def most_similar_segment(
@@ -713,11 +662,7 @@ def pairwise_cosine_knn(
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            F.round(
-                _dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
-                / (_norm(F.col(f"a.{vec_col}")) * _norm(F.col(f"b.{vec_col}"))),
-                4,
-            ).alias("cosine"),
+            _cosine(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"), 4).alias("cosine"),
         )
     )
     w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.col("id_b"))

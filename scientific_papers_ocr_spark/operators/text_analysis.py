@@ -90,10 +90,15 @@ def predict_lang_ngram(text: Column, threshold: float = 0.05) -> Column:
     )
 
 
+def normalized_text(text: Column) -> Column:
+    """Lower-cased, whitespace-collapsed, trimmed text — the dedup
+    operators' one normalisation, identical in Spark and DuckDB."""
+    return F.trim(F.regexp_replace(F.lower(text), "\\s+", " "))
+
+
 def normalized_fingerprint(text: Column) -> Column:
-    """Document fingerprint: md5 of lower-cased, whitespace-collapsed,
-    trimmed text.  Exact-dedup key; identical in Spark and DuckDB."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(text), "\\s+", " ")))
+    """Document fingerprint: md5 of ``normalized_text``.  Exact-dedup key."""
+    return F.md5(normalized_text(text))
 
 
 def remove_unknown_words(

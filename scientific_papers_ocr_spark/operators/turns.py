@@ -147,38 +147,6 @@ def tokenize_blocks(transcripts: DataFrame, num_buckets: int = 64) -> DataFrame:
     return extract_turns(transcripts, num_buckets=num_buckets, with_blocks=True)
 
 
-def repair_parts(transcripts: DataFrame) -> DataFrame:
-    """Explicit (conv, turn, part) repair-part table for incomplete turns —
-    the analog of the reference's ``page_N/part_M.mmd`` hierarchy
-    (check_transcription.py:170-187).  Narrow: parts derive from the same
-    row's layout payload; the explode is local.
-    """
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        worker.bootstrap()
-        for pdf in batches:
-            rows = {"conv_id": [], "turn_idx": [], "part_idx": [], "text": []}
-            for conv_id, turn_idx, text, tool in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["tool"]
-            ):
-                verdict = assembly.score_turn(text or "", tool or "")
-                if verdict["status"] != "incomplete":
-                    continue
-                parts = assembly.repair_turn(text or "", tool or "")
-                if parts is None:
-                    continue
-                for p_idx, p_text in enumerate(parts):
-                    rows["conv_id"].append(conv_id)
-                    rows["turn_idx"].append(turn_idx)
-                    rows["part_idx"].append(p_idx)
-                    rows["text"].append(p_text)
-            yield pd.DataFrame(rows)
-
-    return transcripts.select("conv_id", "turn_idx", "text", "tool").mapInPandas(
-        process, schema=schemas.PARTS_OUT
-    )
-
-
 def flatten_parts_df(parts: DataFrame) -> DataFrame:
     """S8 part-flatten as a pure DataFrame aggregation: part texts joined
     with a single space in part order, deterministically via

@@ -132,22 +132,28 @@ def _assemble(
     verdicts: DataFrame,
     big_ids: list[str] | None,
     store_page_text: str,
+    narrow=None,
 ) -> DataFrame:
     """The one assembler over the turns table ``verdicts`` (tag-unioned with
     the bucketed ``inputs`` under ``repaired_only``).  The oversized
     conversations ``big_ids`` are routed: their boundaries are elected
     first (one small driver-collected job over their pages), and the
     assembler streams them page by page instead of holding them whole.  The
-    docs plan is the same single-exchange plan either way."""
-    tagged = documents.tagged_turns(
-        verdicts, inputs if store_page_text == "repaired_only" else None
-    )
+    docs plan is the same single-exchange plan either way.  ``narrow``, when
+    ``verdicts`` is its lazy output over ``inputs``, is re-run for the
+    election over the routed input rows only: no filter passes below its
+    ``MapInPandas``."""
+
+    def tagged(v: DataFrame, i: DataFrame) -> DataFrame:
+        return documents.tagged_turns(v, i if store_page_text == "repaired_only" else None)
+
     routed = None
     if big_ids:
-        routed = segment_distributed.elect_boundaries(
-            tagged.where(F.col("conv_id").isin(big_ids))
-        )
-    return documents.assemble_sorted(tagged, routed)
+        is_big = F.col("conv_id").isin(big_ids)
+        big_inputs = inputs.where(is_big)
+        big_verdicts = narrow(big_inputs) if narrow else verdicts.where(is_big)
+        routed = segment_distributed.elect_boundaries(tagged(big_verdicts, big_inputs))
+    return documents.assemble_sorted(tagged(verdicts, inputs), routed)
 
 
 def run_pipeline(
@@ -240,16 +246,20 @@ def run_pipeline(
             # anti-join on the small committed-bucket set: broadcast it
             df = df.join(F.broadcast(done), on="bucket", how="left_anti")
 
-    turns_out = turns.extract_turns(
-        df.drop("bucket"), num_buckets=num_buckets, page_text_mode=store_page_text
-    )
+    def narrow(rows: DataFrame) -> DataFrame:
+        return turns.extract_turns(
+            rows.drop("bucket"), num_buckets=num_buckets, page_text_mode=store_page_text
+        )
+
+    turns_out = narrow(df)
 
     if not output_dir:
         # lazy path: nothing is materialised, so conversation sizes can only
         # come from the raw input — one column-pruned (conv_id-only) count
         # job that never touches the pandas narrow stage
         docs_out = _assemble(
-            df, turns_out, _probe_big_ids(df, skew_turn_threshold), store_page_text
+            df, turns_out, _probe_big_ids(df, skew_turn_threshold), store_page_text,
+            narrow,
         )
         return {
             "turns": turns_out,

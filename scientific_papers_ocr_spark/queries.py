@@ -540,15 +540,11 @@ def q_lsh_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB near-dup path end-to-end over ALL documents: banded LSH
     candidates (b=4, r=2) → exact n-gram Jaccard verification restricted to
     the candidate pairs (left-semi) — never an all-pairs scan."""
-    d = _t(spark, sf_dir, "documents")
-    arrs = dedup.word_shingle_arrays(d)
-    sh = dedup.word_shingles(d)
+    arrs = dedup.word_shingle_arrays(_t(spark, sf_dir, "documents"))
     cands = dedup.lsh_candidate_pairs(
         dedup.lsh_band_values_arrays(arrs, n_bands=4, rows_per_band=2)
     )
-    return dedup.jaccard_pairs(
-        sh, threshold=0.1, candidates=cands, shingle_arrays=arrs
-    )
+    return dedup.jaccard_pairs(None, arrs, threshold=0.1, candidates=cands)
 
 
 SQL_LSH_JACCARD = f"""
@@ -702,28 +698,19 @@ SELECT doc_id, CAST({packed} AS BIGINT) AS simhash FROM votes
 SQL_SIMHASH = _simhash_sql(16)
 
 
+def _query_vec(emb: DataFrame) -> DataFrame:
+    """The similarity queries' single-row query frame over the embeddings
+    table ``emb``: the vec_id=0 embedding as ``qvec``.  Callers pass the
+    frame they already read (each extra parquet read is a file listing and
+    a footer read at plan time)."""
+    return emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
+
+
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 to the vec_id=0 embedding; the query vector
     joins in as a broadcast single-row dim table (no driver collect)."""
     emb = _t(spark, sf_dir, "embeddings")
-    query = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
-    dot = F.aggregate(
-        F.zip_with(F.col("embedding"), F.col("qvec"), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
-    )
-    return (
-        emb.crossJoin(F.broadcast(query))
-        .select(
-            "vec_id",
-            F.round(dot / (norm(F.col("embedding")) * norm(F.col("qvec"))), 4).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.col("vec_id"))
-        .limit(10)
-    )
+    return similarity.brute_force_topk(emb, _query_vec(emb), k=10)
 
 
 SQL_EMBEDDING_TOPK = """
@@ -749,8 +736,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect; buckets come from portable md5-nibble projections, so DuckDB
     reproduces them exactly."""
     emb = _t(spark, sf_dir, "embeddings")
-    query = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
-    return similarity.ann_topk(emb, query, k=10, n_planes=6)
+    return similarity.ann_topk(emb, _query_vec(emb), k=10, n_planes=6)
 
 
 def _bucket_sql(n_planes: int, source: str, out: str) -> str:
@@ -888,24 +874,28 @@ def _mark_ingest(path: str, signature: str) -> None:
         f.write(signature)
 
 
-def ensure_ann_ingest(spark: SparkSession, sf_dir: str, n_planes: int = 6) -> str:
-    """Idempotent ingest-time materialisation of the ANN layout for
-    ``sf_dir``: the embeddings table written once, partitioned by
-    ``lsh_bucket`` (committed = ``_SUCCESS`` + matching source signature,
-    so a regenerated source table re-ingests instead of serving a stale
-    layout).  At 100 TB this is the ingest job; probes afterwards are
-    partition pruning."""
-    path = ann_ingest_path(sf_dir, n_planes)
+def _ensure_ingest(spark: SparkSession, sf_dir: str, path: str, write) -> str:
+    """Idempotent ingest-time materialisation of an embeddings layout at
+    ``path``: ``write(embeddings, path)`` runs once (committed = ``_SUCCESS``
+    + matching source signature, so a regenerated source table re-ingests
+    instead of serving a stale layout).  At 100 TB this is the ingest job;
+    probes afterwards are partition pruning."""
     sig = _source_signature(sf_dir)
     session.warm_python_workers(spark)
-    similarity.warm_plane_weights()
-    _adopt_legacy_layout(sf_dir, f"embeddings_by_lsh{n_planes}", path, sig)
+    _adopt_legacy_layout(sf_dir, os.path.basename(path), path, sig)
     if not _ingest_committed(path, sig):
-        similarity.write_bucket_partitioned(
-            _t(spark, sf_dir, "embeddings"), path, n_planes=n_planes
-        )
+        write(_t(spark, sf_dir, "embeddings"), path)
         _mark_ingest(path, sig)
     return path
+
+
+def ensure_ann_ingest(spark: SparkSession, sf_dir: str, n_planes: int = 6) -> str:
+    """The ANN layout for ``sf_dir``: embeddings partitioned by
+    ``lsh_bucket``."""
+    return _ensure_ingest(
+        spark, sf_dir, ann_ingest_path(sf_dir, n_planes),
+        lambda emb, path: similarity.write_bucket_partitioned(emb, path, n_planes=n_planes),
+    )
 
 
 def q_ann_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -916,13 +906,8 @@ def q_ann_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     per probe (plan-asserted in tests/test_plans.py).  Result-identical to
     ``ann_topk`` — same oracle SQL."""
     path = ensure_ann_ingest(spark, sf_dir, n_planes=6)
-    bucketed = spark.read.parquet(path)
-    query = (
-        _t(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") == 0)
-        .select(F.col("embedding").alias("qvec"))
-    )
-    return similarity.ann_topk_pruned(bucketed, query, k=10, n_planes=6)
+    query = _query_vec(_t(spark, sf_dir, "embeddings"))
+    return similarity.ann_topk_pruned(spark.read.parquet(path), query, k=10, n_planes=6)
 
 
 def q_embedding_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -932,13 +917,11 @@ def q_embedding_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pairwise_cosine_knn(emb, k=3)
 
 
-def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ivf_centroids(emb: DataFrame) -> DataFrame:
     """Coarse-quantizer centroid table shared by the IVF queries: the first
-    8 vectors."""
-    return (
-        _t(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") < 8)
-        .select(F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid"))
+    8 vectors of the embeddings table ``emb``."""
+    return emb.where(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
     )
 
 
@@ -947,19 +930,12 @@ def ivf_ingest_path(sf_dir: str) -> str:
 
 
 def ensure_ivf_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent IVF ingest: embeddings written once partitioned by
-    ``ivf_cell`` (nearest of the 8 coarse centroids); re-ingests when the
-    source table's signature changes (see ``_source_signature``)."""
-    path = ivf_ingest_path(sf_dir)
-    sig = _source_signature(sf_dir)
-    session.warm_python_workers(spark)
-    _adopt_legacy_layout(sf_dir, "embeddings_by_ivf8", path, sig)
-    if not _ingest_committed(path, sig):
-        similarity.write_ivf_partitioned(
-            _t(spark, sf_dir, "embeddings"), _ivf_centroids(spark, sf_dir), path
-        )
-        _mark_ingest(path, sig)
-    return path
+    """The IVF layout for ``sf_dir``: embeddings partitioned by ``ivf_cell``
+    (nearest of the 8 coarse centroids)."""
+    return _ensure_ingest(
+        spark, sf_dir, ivf_ingest_path(sf_dir),
+        lambda emb, path: similarity.write_ivf_partitioned(emb, _ivf_centroids(emb), path),
+    )
 
 
 def q_ivf_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -969,14 +945,9 @@ def q_ivf_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     of re-running the coarse quantizer over every row (plan-asserted).
     Result-identical to ``ivf_topk`` — same oracle SQL."""
     path = ensure_ivf_ingest(spark, sf_dir)
-    bucketed = spark.read.parquet(path)
-    query = (
-        _t(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") == 0)
-        .select(F.col("embedding").alias("qvec"))
-    )
+    emb = _t(spark, sf_dir, "embeddings")
     return similarity.ivf_topk_pruned(
-        bucketed, _ivf_centroids(spark, sf_dir), query, k=10, n_probe=2
+        spark.read.parquet(path), _ivf_centroids(emb), _query_vec(emb), k=10, n_probe=2
     )
 
 
@@ -985,11 +956,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors act as the coarse-quantizer centroid table, the query probes its
     2 nearest cells, exact scoring runs only inside them."""
     emb = _t(spark, sf_dir, "embeddings")
-    centroids = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
-    )
-    query = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
-    return similarity.ivf_topk(emb, centroids, query, k=10, n_probe=2)
+    return similarity.ivf_topk(emb, _ivf_centroids(emb), _query_vec(emb), k=10, n_probe=2)
 
 
 _COS6 = (

@@ -64,16 +64,6 @@ TURNS_CORE_BLOCKS = T.StructType(
     [f for f in TURNS_OUT_BLOCKS.fields if f.name != "bucket"]
 )
 
-# Repair parts table: (conv, turn, part) composite key
-PARTS_OUT = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("part_idx", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), True),
-    ]
-)
-
 POSITION = T.StructType(
     [
         T.StructField("turn_idx", T.IntegerType(), True),

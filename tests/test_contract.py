@@ -1,7 +1,11 @@
 """Driver-contract smoke: entry() returns rows with a stable schema; every
 queries() entry runs at sf0.001; oracle_sql() strings are valid DuckDB over
-the same tables.  (The full value-equality sweep lives in
-tools/check_contract.py and runs at sf0.01.)"""
+the same tables; the dedup and similarity queries hash-match their oracles.
+(The full value-equality sweep lives in tools/check_contract.py and runs at
+sf0.01.)"""
+
+import importlib.util
+import os as _os
 
 import duckdb
 import pytest
@@ -9,11 +13,37 @@ import pytest
 import __spark_entry__ as entrymod
 
 SF = "/root/testdata/sf0.001"
-import os as _os
 REPO = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+
+_spec = importlib.util.spec_from_file_location(
+    "check_contract", _os.path.join(REPO, "tools", "check_contract.py")
+)
+check_contract = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(check_contract)
+
+# the registry queries built on operators.dedup / operators.similarity, and
+# whether they must return rows at sf0.001 (the oracle finds no exact
+# duplicates there)
+VALUE_CHECKED = {
+    "fingerprint": True,
+    "exact_dedup": False,
+    "dedup_filter": True,
+    "minhash_signatures": True,
+    "minhash_candidates": True,
+    "lsh_jaccard": True,
+    "ngram_jaccard": True,
+    "winnow_fingerprints": True,
+    "simhash": True,
+    "embedding_topk": True,
+    "ann_topk": True,
+    "ann_topk_pruned": True,
+    "ivf_topk": True,
+    "ivf_topk_pruned": True,
+    "embedding_knn_pairs": True,
+}
 
 
 def test_entry_smoke(spark):
@@ -52,6 +82,29 @@ def test_queries_and_oracles_share_column_names(spark):
         scols = sorted(qs[name](spark, SF).columns)
         dcols = sorted(d[0] for d in con.execute(sql).description)
         assert scols == dcols, f"{name}: {scols} vs {dcols}"
+
+
+@pytest.mark.parametrize("name", sorted(VALUE_CHECKED))
+def test_dedup_and_similarity_values_match_oracle(spark, name):
+    """Row count and order-insensitive value hash equal the DuckDB oracle's,
+    computed the way tools/check_contract.py computes them."""
+    con = duckdb.connect()
+    for t in check_contract.TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
+        )
+    sdf = entrymod.queries()[name](spark, SF)
+    srows = [tuple(r) for r in sdf.collect()]
+    ddf = con.execute(entrymod.oracle_sql()[name])
+    dcols = [d[0] for d in ddf.description]
+    drows = [tuple(r) for r in ddf.fetchall()]
+    if VALUE_CHECKED[name]:
+        assert srows
+    assert sorted(sdf.columns) == sorted(dcols)
+    assert len(srows) == len(drows)
+    assert check_contract.value_hash(srows, sdf.columns) == check_contract.value_hash(
+        drows, dcols
+    )
 
 
 @pytest.mark.slow

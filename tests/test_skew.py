@@ -108,3 +108,35 @@ def test_narrow_stage_shuffle_free_under_skew(skewed_df):
 
     assert exchanges_above_cache(skewed_df) == 0
     assert exchanges_above_cache(turnops.extract_turns(skewed_df, num_buckets=8)) == 0
+
+
+def test_lazy_election_filters_input_below_narrow_stage(
+    spark, tmp_path, monkeypatch
+):
+    """On the lazy path the boundary election must run the narrow stage over
+    the routed conversations' input rows only: in the election frame's
+    optimized plan the conv_id filter sits below the MapInPandas (a filter
+    above it cannot be pushed through, so the election job would re-run the
+    narrow stage over the whole input)."""
+    from scientific_papers_ocr_spark import pipeline
+
+    path = str(tmp_path / "zipf.parquet")
+    fixtures.spark_corpus(spark, 8, seed=42, zipf_max_turns=120).write.parquet(path)
+    plans = []
+    real = dist.elect_boundaries
+
+    def spy(tagged):
+        plans.append(tagged._jdf.queryExecution().optimizedPlan().toString())
+        return real(tagged)
+
+    monkeypatch.setattr(dist, "elect_boundaries", spy)
+    pipeline.run_pipeline(
+        spark, spark.read.parquet(path), output_dir=None, num_buckets=4,
+        skew_turn_threshold=10,
+    )
+    assert len(plans) == 1, plans
+    lines = plans[0].splitlines()
+    mip = [i for i, ln in enumerate(lines) if "MapInPandas" in ln]
+    filters = [i for i, ln in enumerate(lines) if "Filter" in ln and "conv_id" in ln]
+    assert len(mip) == 1 and filters, plans[0]
+    assert all(i > mip[0] for i in filters), plans[0]
