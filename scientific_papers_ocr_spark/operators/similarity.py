@@ -31,7 +31,6 @@ nearest centroid, so they co-bucket with the query.
 from __future__ import annotations
 
 import functools
-import logging
 import struct
 
 from pyspark import SparkContext
@@ -40,7 +39,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ..sources.transcripts import write_partitioned
 
 _HEX = "0123456789abcdef"
-_log = logging.getLogger(__name__)
 
 
 def _dot(a, b):
@@ -164,24 +162,12 @@ def _literal_doubles(values: list[float]) -> Column:
     through analysis and constant folding in every query that embeds it,
     ~1.5 s of driver time per ann query build, measured).  The bytes are the
     IEEE doubles themselves, so every weight arrives bit-for-bit."""
-    try:
-        sc = SparkContext._active_spark_context
-        jvm = sc._jvm
-        raw = bytearray(struct.pack(f">{len(values)}d", *values))
-        arr = sc._gateway.new_array(jvm.double, len(values))
-        jvm.java.nio.ByteBuffer.wrap(raw).asDoubleBuffer().get(arr)
-        return Column(jvm.org.apache.spark.sql.functions.lit(arr))
-    except Exception:  # noqa: BLE001 — e.g. no JVM gateway (Spark Connect)
-        _warn_unfolded()
-        return F.expr("array(" + ",".join(repr(v) + "D" for v in values) + ")")
-
-
-@functools.cache
-def _warn_unfolded() -> None:
-    _log.warning(
-        "LSH plane weights could not be built as literals; using an unfolded "
-        "array() expression that every ANN query build re-analyses"
-    )
+    sc = SparkContext._active_spark_context
+    jvm = sc._jvm
+    raw = bytearray(struct.pack(f">{len(values)}d", *values))
+    arr = sc._gateway.new_array(jvm.double, len(values))
+    jvm.java.nio.ByteBuffer.wrap(raw).asDoubleBuffer().get(arr)
+    return Column(jvm.org.apache.spark.sql.functions.lit(arr))
 
 
 def bucket_expr(vec: Column, n_planes: int) -> Column:
@@ -424,8 +410,6 @@ def ivf_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    centroid_vec_col: str = "centroid",
 ) -> DataFrame:
     """IVF cell assignment: nearest centroid per vector (cosine), via a
     broadcast join against the (small) centroid table + per-row argmin —
@@ -436,10 +420,8 @@ def ivf_assign(
     c = centroids.alias("c")
     scored = a.join(F.broadcast(c)).select(
         f"a.{id_col}",
-        F.col(f"c.{centroid_id_col}").alias("cand_cell"),
-        _cosine(F.col(f"a.{vec_col}"), F.col(f"c.{centroid_vec_col}"), 6).alias(
-            "cell_cos"
-        ),
+        F.col("c.centroid_id").alias("cand_cell"),
+        _cosine(F.col(f"a.{vec_col}"), F.col("c.centroid"), 6).alias("cell_cos"),
     )
     return scored.groupBy(id_col).agg(
         F.max_by(
@@ -533,23 +515,6 @@ def ivf_topk(
     return ivf_topk_pruned(fact, centroids, query, k, n_probe, id_col, vec_col)
 
 
-def _nearest_cells(centroids: DataFrame, query: DataFrame, n_probe: int) -> DataFrame:
-    """The query's ``n_probe`` nearest centroid cells (broadcast query row ×
-    broadcast centroid table), each row carrying ``qvec`` and its ``cell``
-    id; ties go to the smaller id, as in ``ivf_assign``."""
-    return (
-        F.broadcast(_query_row(query))
-        .join(F.broadcast(centroids))
-        .select(
-            "qvec",
-            F.col("centroid_id").alias("cell"),
-            _cosine(F.col("qvec"), F.col("centroid"), 6).alias("qcos"),
-        )
-        .orderBy(F.desc("qcos"), F.col("cell"))
-        .limit(n_probe)
-    )
-
-
 def write_ivf_partitioned(
     df: DataFrame,
     centroids: DataFrame,
@@ -579,8 +544,19 @@ def ivf_topk_pruned(
     (``write_ivf_partitioned``): the query's ``n_probe`` nearest cells join
     in as a broadcast dim keyed on the partition column, so the scan
     dynamically prunes to the probed cell directories.  Result-identical to
-    ``ivf_topk`` on the same data (parity-tested)."""
-    qcells = _nearest_cells(centroids, query, n_probe)
+    ``ivf_topk`` on the same data (parity-tested).  Cosine ties among the
+    cells go to the smaller id, as in ``ivf_assign``."""
+    qcells = (
+        F.broadcast(_query_row(query))
+        .join(F.broadcast(centroids))
+        .select(
+            "qvec",
+            F.col("centroid_id").alias("cell"),
+            _cosine(F.col("qvec"), F.col("centroid"), 6).alias("qcos"),
+        )
+        .orderBy(F.desc("qcos"), F.col("cell"))
+        .limit(n_probe)
+    )
     cand = bucketed.join(F.broadcast(qcells), bucketed["ivf_cell"] == qcells["cell"])
     return _topk(cand, k, id_col, vec_col)
 

@@ -274,20 +274,6 @@ class TestSimilarity:
             assert expr.getClass().getSimpleName() == "Literal", expr.toString()[:200]
             assert df.first()["w"] == similarity._plane_weights_py(p)
 
-    def test_unfolded_weights_fallback_logs_once(self, spark, monkeypatch, caplog):
-        """Without a JVM gateway the weights fall back to an unfolded array()
-        expression with the same values, and say so once."""
-
-        class NoGateway:
-            _active_spark_context = None
-
-        monkeypatch.setattr(similarity, "SparkContext", NoGateway)
-        similarity._warn_unfolded.cache_clear()
-        with caplog.at_level("WARNING", logger=similarity.__name__):
-            cols = [similarity._literal_doubles([0.1, -2.5]) for _ in range(3)]
-        assert len([r for r in caplog.records if "unfolded" in r.getMessage()]) == 1
-        assert spark.range(1).select(cols[0].alias("w")).first()["w"] == [0.1, -2.5]
-
     def test_ann_contains_query_itself(self, emb):
         q = emb.where(F.col("vec_id") == 0).first()["embedding"]
         got = similarity.ann_topk(emb, list(q), k=5, n_planes=4)
